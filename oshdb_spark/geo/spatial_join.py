@@ -532,7 +532,7 @@ def knn_batch(
 ) -> DataFrame:
     """Exact kNN for a BATCH of query points in exactly TWO Spark jobs —
     no per-ring driver loop (the scale-safe replacement for `knn`'s
-    radius-doubling probe). Pass `cell_counts` (the docs store's
+    radius-doubling probe). Pass `cell_counts` (the typed store's
     `_manifest/cell_counts.json` histogram at the same `level`,
     plans.layout.read_cell_counts) to skip the histogram job entirely —
     ONE action total.

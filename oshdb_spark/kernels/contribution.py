@@ -24,7 +24,6 @@ Semantics ≙ CellIterator.iterateByContribution
 from __future__ import annotations
 
 import json
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -50,10 +49,8 @@ from .snapshot import (
     _point_wkb_vec,
     _points_in_aoi,
     _resolve_way_geometry,
-    _route_way_fast,
-    _vectorizable_decider,
     _way_wkb_vec,
-    prepared_docs,
+    _routed_kernel,
 )
 from .temporal import (
     changeset_timestamps,
@@ -553,9 +550,10 @@ def contributions(
 ) -> DataFrame:
     """The contribution view (schema model.schemas.CONTRIBUTIONS).
 
-    Member-less node docs run through the vectorized numpy path
-    (_nodes_contrib_vec); ways/relations/python-filtered docs go through
-    the general per-doc path."""
+    Node, way and relation docs of the fast shapes run through the
+    vectorized numpy paths (_nodes_contrib_vec and siblings); the rest, and
+    every doc under a python filter, go through the general per-doc path
+    (routing: _routed_kernel)."""
     if isinstance(interval, (list, tuple)) and len(interval) >= 2:
         t_first, t_last = int(min(interval)), int(max(interval))
     else:
@@ -563,68 +561,26 @@ def contributions(
     aoi = AOI(bbox=bbox, polygon=polygon)
     decider = area_decider or DEFAULT_INTERPRETER
     flt = compile_python(filter_spec)
-    from .relation_vec import rel_fast_mode, rels_contrib_vec
-    from .snapshot import _allowed_types
+    from .relation_vec import rels_contrib_vec
 
-    types = _allowed_types(filter_spec)
-    fast_ways = _vectorizable_decider(decider) and (
-        types is None or "way" in types
+    return _routed_kernel(
+        docs, filter_spec, aoi, decider,
+        node_vec=lambda p: _nodes_contrib_vec(
+            p, t_first, t_last, aoi, with_geometry
+        ),
+        way_vec=lambda p: _ways_contrib_vec(
+            p, t_first, t_last, with_geometry, decider
+        ),
+        rel_vec=lambda p: rels_contrib_vec(
+            p, t_first, t_last, with_geometry, decider
+        ),
+        emit=lambda row, out, tok: _emit_doc_contributions(
+            row, t_first, t_last, aoi, flt, decider, with_geometry, out,
+            token=tok,
+        ),
+        cols=_CONTRIB_COLS,
+        schema=schemas.CONTRIBUTIONS,
     )
-    fast_rels = (
-        rel_fast_mode(decider)
-        if types is None or "relation" in types
-        else None
-    )
-    typed = prepared_docs(
-        docs, filter_spec, aoi, fast_arrays=True, fast_ways=fast_ways,
-        fast_rels=fast_rels,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            fk = pdf["fast_kind"]
-            node_mask = (fk == "node").to_numpy()
-            way_raw = (fk == "way").to_numpy()
-            rel_raw = (fk == "relation").to_numpy()
-            way_mask, way_demote = _route_way_fast(pdf, way_raw, aoi)
-            rel_mask, rel_demote = _route_way_fast(pdf, rel_raw, aoi)
-            gen_mask = (
-                ~(node_mask | way_raw | rel_raw) | way_demote | rel_demote
-            )
-            frames = []
-            if node_mask.any():
-                frames.append(
-                    _nodes_contrib_vec(
-                        pdf[node_mask], t_first, t_last, aoi, with_geometry
-                    )
-                )
-            if way_mask.any():
-                frames.append(
-                    _ways_contrib_vec(
-                        pdf[way_mask], t_first, t_last, with_geometry, decider
-                    )
-                )
-            if rel_mask.any():
-                frames.append(
-                    rels_contrib_vec(
-                        pdf[rel_mask], t_first, t_last, with_geometry, decider
-                    )
-                )
-            if gen_mask.any():
-                gpdf = pdf[gen_mask]
-                gtoks = _doc_tokens(gpdf)
-                out: list[tuple] = []
-                for row, tok in zip(gpdf.to_dict("records"), gtoks):
-                    _emit_doc_contributions(
-                        row, t_first, t_last, aoi, flt, decider,
-                        with_geometry, out, token=tok,
-                    )
-                frames.append(pd.DataFrame(out, columns=_CONTRIB_COLS))
-            yield pd.concat(frames, ignore_index=True) if frames else _empty_frame(_CONTRIB_COLS)
-
-    return typed.mapInPandas(kernel, schema=schemas.CONTRIBUTIONS)
 
 
 def _tags_equal(a: dict | None, b: dict | None) -> bool:

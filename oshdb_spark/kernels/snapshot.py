@@ -54,23 +54,14 @@ def with_doc_bbox(typed: DataFrame) -> DataFrame:
     own versions ∪ embedded member versions — the analog of the OSH
     entity's stored bounding box used by the reference pre-filter
     (CellIterator.java:201-204). Reads member coords from `members`
-    (LITE) and, when present, `membersR` (the relation fast path's full
-    decode — those docs carry NO LITE members, avoiding a double parse)."""
-    mr = (
-        ", flatten(transform(coalesce(membersR, array()),"
-        " m -> m.versions.lon))"
-        if "membersR" in typed.columns
-        else ""
-    )
-    mr_lat = mr.replace(".lon", ".lat")
+    (LITE) and `membersR` (relation docs' full decode — those docs carry
+    NO LITE members, avoiding a double parse)."""
     all_lons = (
-        "concat(versions.lon, flatten(transform(coalesce(members, array()),"
-        f" m -> m.versions.lon)){mr})"
+        "concat(versions.lon,"
+        " flatten(transform(coalesce(members, array()), m -> m.versions.lon)),"
+        " flatten(transform(coalesce(membersR, array()), m -> m.versions.lon)))"
     )
-    all_lats = (
-        "concat(versions.lat, flatten(transform(coalesce(members, array()),"
-        f" m -> m.versions.lat)){mr_lat})"
-    )
+    all_lats = all_lons.replace(".lon", ".lat")
     return (
         typed.withColumn("_lons", F.expr(f"filter({all_lons}, x -> x is not null)"))
         .withColumn("_lats", F.expr(f"filter({all_lats}, x -> x is not null)"))
@@ -112,94 +103,132 @@ def prepared_docs(
     fast_arrays: bool = False,
     fast_ways: bool = False,
     fast_rels: str | None = None,
-    store_mode: bool = False,
 ) -> DataFrame:
-    """Summarized + JVM-pre-filtered docs (shared by both kernels).
+    """Summarized + JVM-pre-filtered kernel input (shared by both kernels).
 
-    The typed decode runs JVM-side for pre-filtering and bbox summaries,
-    but the kernel input carries only Arrow-safe columns (raw spans +
-    scalars): shipping array<struct<...map...>> through the Arrow channel
-    segfaults pyarrow's arrow_to_pandas, so version/member JSON is parsed
-    in the kernel instead.
+    Two steps, whatever the input:
 
-    With ``fast_arrays=True``, member-less node docs additionally carry
-    their version fields as JVM-parsed PRIMITIVE parallel arrays (vts,
-    vlon, ... — Arrow-safe, no nested maps) and NULL spans, so the kernel
-    can run them through a fully vectorized numpy path with zero
-    per-version Python. Tag filters are evaluated JVM-side into a
-    ``vmatch`` boolean array (the analog of fusing the reference's exact
-    filters into the scan). Docs that need the general path (relations,
-    python filters) keep their spans and get NULL arrays.
+    1. **Encode.** Raw ``(doc_id, spans)`` and native-typed docs run the
+       doc encoder (``encode_docs`` — the same projection the typed store
+       materializes at ETL time) in flight. Typed-store input
+       (plans.layout.write_typed_store, recognised by its ``flat_kind``
+       column) is already encoded and skips this step. The doc
+       pre-filter and the AOI bbox-overlap filter run once, between the
+       encoder's two barriers, so selective queries never flatten the
+       docs they drop.
+    2. **Gate** (``_routed_docs``, the only routing site): per-query
+       routing flags over the encoded rows — ``fast_kind`` ('node' |
+       'way' | 'relation' | null) picks each doc's kernel, the filter's
+       tag predicates become the ``vmatch`` boolean array, and the flat
+       arrays of docs that do not take their fast path are nulled.
 
-    With ``fast_ways=True`` additionally, WAY docs whose members are all
-    nodes AND that need no clipping (doc bbox fully inside the AOI bbox;
-    callers must not set this when the AOI has a polygon) get flat member
-    arrays too: per-version ref-id lists flattened to (vref, vrefcnt) and
-    per-member sorted version histories flattened to (mid, mvcnt, mts,
-    mvis, mlon, mlat, mcs, muid) — all single-level primitive arrays, so
-    one np.concatenate per column rebuilds the batch-global flat table.
-    The column `fast_kind` ('node' | 'way' | 'relation' | null) routes
-    each doc.
+    The kernel input carries only Arrow-safe columns (spans + scalars +
+    single-level primitive arrays): shipping array<struct<...map...>>
+    through the Arrow channel segfaults pyarrow's arrow_to_pandas, so
+    general-path docs parse their span JSON in the kernel.
 
-    With ``fast_rels`` ('default' | 'never' — the area-decider mode)
-    additionally, RELATION docs that can never take the multipolygon
-    assembly path (mode 'default': no version carries
-    type∈{multipolygon,boundary}; mode 'never': all) and whose members
-    are nodes/ways only get TWO-LEVEL flat member tables: own refs keep
-    their type (rvref/rvreftype), member histories carry way tags + ref
-    id lists (rm* columns), so the kernel resolves
-    relation→way-member→node-member as-of joins with pure searchsorted.
-    """
+    With ``fast_arrays=False`` only the doc summary and spans are
+    returned (no routing). Otherwise:
+
+    - member-less NODE docs always take the vectorized path (NULL spans
+      unless a python filter forces the general path);
+    - with ``fast_ways``, WAY docs whose members are all nodes and whose
+      doc bbox lies inside the AOI bbox get the flat member arrays
+      (vref, vrefcnt, mid, mvcnt, mts, mvis, mlon, mlat, mcs, muid);
+    - with ``fast_rels`` ('default' | 'never' — the area-decider mode),
+      RELATION docs whose members are nodes/ways only, inside the AOI
+      bbox, get the two-level flat member tables (rv*/rm* columns), so
+      the kernel resolves relation→way-member→node-member as-of joins
+      with pure searchsorted.
+
+    Under a polygon AOI the bbox test is only necessary: way/relation
+    docs keep their spans so the kernel can demote boundary docs to the
+    general path after its exact 3-state test."""
+    encoded = "flat_kind" in docs.columns
+    if not encoded:
+        docs = _decoded_docs(docs)
     pre = compile_doc_prefilter(filter_spec)
-    has_py = any(s[0] == "py" for s in (filter_spec or []))
-    # FLAT-STORE input (plans.layout.write_typed_store): the heavy decode
-    # (from_json, ts parse, member flattening, member-version sorting) ran
-    # ONCE at ETL time — the store carries the kernel-ready flat primitive
-    # arrays, the raw spans (general path), and the sorted nested
-    # `versions` column (SQL path / vmatch / prefilter; Catalyst prunes it
-    # when unreferenced). Deeply nested `members` is deliberately NOT
-    # stored: array<struct<…versions:array<struct<tags:map…>>>> defeats
-    # both the parquet nested reader and the Arrow transfer (measured 40×
-    # slower than the flat layout on member-heavy docs).
-    if "flat_kind" in docs.columns:
-        return _flat_store_docs(
-            docs, filter_spec, aoi, fast_arrays, fast_ways, fast_rels,
-            has_py, pre,
+    if pre is not None:
+        docs = docs.filter(pre)
+    if aoi is not None and not aoi.is_world:
+        b = aoi.bbox
+        docs = docs.filter(
+            (F.col("bbox_min_lon") <= int(b[2] * _FP))
+            & (F.col("bbox_max_lon") >= int(b[0] * _FP))
+            & (F.col("bbox_min_lat") <= int(b[3] * _FP))
+            & (F.col("bbox_max_lat") >= int(b[1] * _FP))
         )
-    # NATIVE-TYPED derived docs (model.history): entity_type/id/versions/
-    # members are already struct columns built by the same expressions
-    # whose to_json produced the spans — no from_json anywhere on this
-    # path, and Catalyst materializes the to_json spans only for rows the
-    # general path actually reads
+    if not fast_arrays:
+        return docs.select(*_BASE, "spans")
+    if not encoded:
+        docs = _flattened_docs(docs)
+    return _routed_docs(docs, filter_spec, aoi, fast_ways, fast_rels)
+
+
+def encode_docs(docs: DataFrame) -> DataFrame:
+    """The doc encoder: raw ``(doc_id, spans)`` or native-typed docs →
+    the typed-store row shape (the analog of the reference's ETL encoding
+    OSH entities into binary cell blobs). It takes no query arguments:
+
+    - doc summary: ``doc_id``, ``entity_type``, ``id`` and the
+      fixed-point doc bbox;
+    - ``spans`` for every doc (any later query may route any doc to the
+      general path — python filters);
+    - the structural routing fact ``flat_kind`` ('node' memberless /
+      'way' all-node members / 'relation' node-and-way members / null);
+    - the flat version arrays (_V_COLS) for every doc, the flat member
+      tables (_W_COLS / _R_COLS) for docs of the matching ``flat_kind``;
+    - the sorted nested ``versions`` column (SQL path, vmatch, doc
+      pre-filter).
+
+    plans.layout.write_typed_store stores this projection; prepared_docs
+    runs it in flight over raw and native input."""
+    return _flattened_docs(_decoded_docs(docs))
+
+
+_BASE = [
+    "doc_id", "entity_type", "id",
+    "bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat",
+]
+# flat-array column groups of the encoder (same names and element types
+# in flight and in the typed store)
+_V_COLS = [
+    "vts", "vversion", "vvisible", "vchangeset", "vuid", "vlon", "vlat",
+    "vtags",
+]
+_W_COLS = [
+    "vrefcnt", "vref", "mid", "mvcnt", "mts", "mvis", "mlon", "mlat",
+    "mcs", "muid",
+]
+_R_COLS = [
+    "rvrefcnt", "rvref", "rvreftype", "rvrefrole", "rmid", "rmtype",
+    "rmvcnt", "rmts", "rmver", "rmvis", "rmlon", "rmlat", "rmcs", "rmuid",
+    "rmtags", "rmrefcnt", "rmref",
+]
+
+
+def _decoded_docs(docs: DataFrame) -> DataFrame:
+    """Encoder stage 1: typed decode behind the first materialization
+    barrier, plus the doc bbox summary.
+
+    RAW docs decode with from_json; the versions sort happens later, over
+    a bound column (stage 2). NATIVE-TYPED derived docs (model.history)
+    already carry entity_type/id/versions/members struct columns built by
+    the same expressions whose to_json produced the spans — no from_json
+    anywhere on that path.
+
+    Barrier: a nondeterministic column blocks ProjectCollapse, so the
+    decode of versions/members is evaluated ONCE per row here instead of
+    being re-inlined into every downstream array column (lambda-bearing
+    expressions are excluded from codegen subexpression elimination —
+    without the barrier the wide flat projection re-decodes the doc
+    ~18×). Relation docs decode members ONCE with the full REL schema
+    (tags + ref ids for the 2-level flat tables) into ``membersR``; all
+    other docs decode the LITE schema into ``members`` (neither the bbox
+    summary nor the way tables need member tags/refs, and from_json
+    skips absent fields)."""
     native = {"versions", "members", "entity_type", "id"} <= set(docs.columns)
-    # RAW docs input: versions sort happens AFTER the barrier over a bound
-    # column (index natural-sort) — the comparator-lambda sort in
-    # typed_docs runs interpreted per comparison; downstream consumers
-    # here either sort later (fast arrays) or are order-insensitive
-    # (bbox, general kernel re-sorts in python)
     typed = docs_mod.typed_docs(docs, sort=False)
-    # member-less node docs ALWAYS take the vectorized path (they never
-    # demote), so their raw spans can be dropped right here instead of
-    # being copied through every projection below
-    memberless = (
-        F.expr("size(members) = 0")
-        if native
-        else ~F.expr("exists(spans, s -> s.kind = 'member')")
-    )
-    spans_out = F.col("spans")
-    if fast_arrays and not has_py and not store_mode:
-        spans_out = F.when(
-            ~((F.col("entity_type") == "node") & memberless),
-            F.col("spans"),
-        )
-    # materialization barrier: a nondeterministic column blocks
-    # ProjectCollapse, so the from_json decode of versions/members is
-    # evaluated ONCE per row here instead of being re-inlined into every
-    # downstream array column (lambda-bearing expressions are excluded
-    # from codegen subexpression elimination — without the barrier the
-    # wide fast-array projection re-decodes the doc ~18×). Members decode
-    # with the LITE schema: neither the bbox summary nor the flat member
-    # tables need member tags/refs, and from_json skips absent fields.
     if native:
         # struct re-projection instead of JSON parse: select the LITE /
         # REL field subsets straight off the native member structs
@@ -229,350 +258,95 @@ def prepared_docs(
             "transform(filter(spans, s -> s.kind = 'member'),"
             f" s -> from_json(s.text, '{schemas.MEMBER_REL.simpleString()}'))"
         )
-    if not fast_rels:
-        first_barrier = [
-            "doc_id", "entity_type", "id",
-            spans_out.alias("spans"),
-            "versions",
-            F.expr(lite_decode).alias("members"),
-        ]
-    else:
-        # relation docs decode members ONCE with the full REL schema
-        # (tags + ref ids for the 2-level flat tables) and carry NO LITE
-        # members; everything downstream (bbox summary, way tables) reads
-        # whichever column its doc kind populates — single barrier, no
-        # double JSON parse, no extra projection on the non-relation path.
-        first_barrier = [
-            "doc_id", "entity_type", "id",
-            spans_out.alias("spans"),
-            "versions",
-            F.expr(
-                "case when entity_type = 'relation' then"
-                f" {rel_decode}"
-                " end"
-            ).alias("membersR"),
-            F.expr(
-                f"case when entity_type <> 'relation' then {lite_decode} end"
-            ).alias("members"),
-        ]
     typed = typed.select(
-        *first_barrier,
+        "doc_id", "entity_type", "id", "spans", "versions",
+        F.expr(
+            f"case when entity_type = 'relation' then {rel_decode} end"
+        ).alias("membersR"),
+        F.expr(
+            f"case when entity_type <> 'relation' then {lite_decode} end"
+        ).alias("members"),
         F.monotonically_increasing_id().alias("_barrier"),
     )
-    # doc pre-filter evaluated on the BOUND arrays (post-barrier): the
-    # exists() predicate can never push into a parquet scan anyway (it
-    # reads decoded JSON), and evaluating it below the barrier paid a
-    # second full decode of every row
-    if pre is not None:
-        typed = typed.filter(pre)
-    typed = with_doc_bbox(typed)
-    if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
-        typed = typed.filter(
-            (F.col("bbox_min_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_max_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_min_lat") <= int(b[3] * _FP))
-            & (F.col("bbox_max_lat") >= int(b[1] * _FP))
-        )
-    base = [
-        "doc_id", "entity_type", "id",
-        "bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat",
-    ]
-    if not fast_arrays:
-        return typed.select(*base, "spans")
-    return _fast_projection(
-        typed, base, F.col("spans"), filter_spec, aoi, fast_ways, fast_rels,
-        has_py, store_mode,
-    )
+    return with_doc_bbox(typed)
 
 
-# flat-array column groups shared by the read-time projection and the
-# flat store (same names, same element types — the store is literally the
-# materialized projection)
-_V_COLS = [
-    "vts", "vversion", "vvisible", "vchangeset", "vuid", "vlon", "vlat",
-    "vtags",
-]
-_W_COLS = [
-    "vrefcnt", "vref", "mid", "mvcnt", "mts", "mvis", "mlon", "mlat",
-    "mcs", "muid",
-]
-_R_COLS = [
-    "rvrefcnt", "rvref", "rvreftype", "rvrefrole", "rmid", "rmtype",
-    "rmvcnt", "rmts", "rmver", "rmvis", "rmlon", "rmlat", "rmcs", "rmuid",
-    "rmtags", "rmrefcnt", "rmref",
-]
-
-
-def _flat_store_docs(
-    docs: DataFrame,
-    filter_spec,
-    aoi: AOI | None,
-    fast_arrays: bool,
-    fast_ways: bool,
-    fast_rels: str | None,
-    has_py: bool,
-    pre,
-) -> DataFrame:
-    """prepared_docs over the FLAT STORE: zero decode — only routing
-    flags, the filter's vmatch, and when()-gating of the stored arrays.
-    Output schema is identical to the raw-docs projection, so the kernels
-    cannot tell the inputs apart. Structural routing facts were frozen at
-    ETL time as `flat_kind` ('node' memberless / 'way' all-node-members /
-    'relation' node-way-members / null) and `has_mp_type`; query-dependent
-    conditions (AOI bbox containment, python filters, decider mode)
-    compose on top here."""
-    from .filters import _version_pred_sql
-
-    typed = docs
-    if pre is not None:
-        typed = typed.filter(pre)
-    if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
-        typed = typed.filter(
-            (F.col("bbox_min_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_max_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_min_lat") <= int(b[3] * _FP))
-            & (F.col("bbox_max_lat") >= int(b[1] * _FP))
-        )
-    base = [
-        "doc_id", "entity_type", "id",
-        "bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat",
-    ]
-    if not fast_arrays:
-        return typed.select(*base, "spans")
-    inside = None
-    if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
-        inside = (
-            (F.col("bbox_min_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-            & (F.col("bbox_max_lat") <= int(b[3] * _FP))
-        )
-    # eqNullSafe: flat_kind is NULL for structurally-unroutable docs, and
-    # a plain == would propagate that NULL into _fast and silently null
-    # out the spans gate (dropping the doc from the general path)
-    fast_node = F.col("flat_kind").eqNullSafe("node")
-    fast_way = F.col("flat_kind").eqNullSafe("way")
-    if inside is not None:
-        fast_way = fast_way & inside
-    if not fast_ways:
-        fast_way = F.lit(False)
-    fast_rel = F.lit(False)
-    if fast_rels:
-        fast_rel = F.col("flat_kind").eqNullSafe("relation")
-        if inside is not None:
-            fast_rel = fast_rel & inside
-    if has_py:
-        fast_node = F.lit(False)
-        fast_way = F.lit(False)
-        fast_rel = F.lit(False)
-    may_demote = aoi is not None and aoi.polygon is not None
-    typed = (
-        typed.withColumn("_fastn", fast_node)
-        .withColumn("_fastw", fast_way)
-        .withColumn("_fastr", fast_rel)
-        .withColumn(
-            "_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr")
-        )
-    )
-    spans_keep = (~F.col("_fastn")) if may_demote else (~F.col("_fast"))
-    preds = [
-        p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p
-    ]
-    match_expr = None
-    if preds:
-        conj = " and ".join(f"({p})" for p in preds)
-        match_expr = f"transform(versions, v -> coalesce({conj}, false))"
-    out_cols = [
-        *base,
-        F.when(spans_keep, F.col("spans")).alias("spans"),
-        F.when(F.col("_fastn"), F.lit("node"))
-        .when(F.col("_fastw"), F.lit("way"))
-        .when(F.col("_fastr"), F.lit("relation"))
-        .alias("fast_kind"),
-        *[F.when(F.col("_fast"), F.col(c)).alias(c) for c in _V_COLS],
-        (
-            F.when(F.col("_fast"), F.expr(match_expr))
-            if match_expr
-            else F.lit(None).cast("array<boolean>")
-        ).alias("vmatch"),
-        *[F.when(F.col("_fastw"), F.col(c)).alias(c) for c in _W_COLS],
-    ]
-    if fast_rels:
-        out_cols += [
-            F.when(F.col("_fastr"), F.col(c)).alias(c) for c in _R_COLS
-        ]
-    return typed.select(*out_cols)
-
-
-def _fast_projection(
-    typed: DataFrame,
-    base: list,
-    spans_col,
-    filter_spec,
-    aoi: AOI | None,
-    fast_ways: bool,
-    fast_rels: str | None,
-    has_py: bool,
-    store_mode: bool = False,
-) -> DataFrame:
-    """Fast-kind routing flags + flat-array projection over JSON-decoded
-    raw docs. With ``store_mode`` (plans.layout.write_typed_store), the
-    projection becomes the ETL encoder for the flat store: flat arrays
-    are UNGATED (computed for every doc of the right shape), spans ride
-    through for all docs, routing facts are emitted as the structural
-    `flat_kind` + `has_mp_type` columns, and the sorted nested `versions`
-    column is kept for the SQL path — so a query over the store replays
-    only _flat_store_docs' cheap gating, never this decode."""
-    from .filters import _version_pred_sql
-
-    preds = [p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p]
+def _flattened_docs(typed: DataFrame) -> DataFrame:
+    """Encoder stage 2: structural ``flat_kind``, the sorted versions and
+    member histories behind the second barrier, and the flat arrays."""
     fast_node = (F.col("entity_type") == "node") & (F.size("members") == 0)
     fast_way = (F.col("entity_type") == "way") & ~F.expr(
         "exists(members, m -> m.entity_type <> 'node')"
     )
-    if aoi is not None and not aoi.is_world:
-        # way fast path handles only fully-inside docs (no clip step);
-        # boundary-crossing ways keep the general per-doc path. For a
-        # polygon AOI this bbox test is only NECESSARY — the kernel
-        # refines with the exact bbox_vs_polygon 3-state and demotes
-        # boundary docs, so their spans are preserved below.
-        b = aoi.bbox
-        fast_way = fast_way & (
-            (F.col("bbox_min_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-            & (F.col("bbox_max_lat") <= int(b[3] * _FP))
-        )
-    if not fast_ways:
-        fast_way = F.lit(False)
-    fast_rel = F.lit(False)
-    if fast_rels:
-        # relation fast path: members are node/way only (multipolygon-
-        # typed versions are handled IN the vectorized kernel — per-state
-        # is_area routes them through assemble_multipolygon on resolved
-        # flat chains, with the geometry-collection fallback).
-        # coalesce: IN over a missing map key is NULL, and exists() over
-        # nulls is NULL — which would silently null out _fast and drop
-        # the doc from every path
-        fast_rel = (F.col("entity_type") == "relation") & ~F.expr(
-            "exists(membersR,"
-            " m -> not coalesce(m.entity_type in ('node', 'way'), false))"
-        )
-        if aoi is not None and not aoi.is_world:
-            b = aoi.bbox
-            fast_rel = fast_rel & (
-                (F.col("bbox_min_lon") >= int(b[0] * _FP))
-                & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-                & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-                & (F.col("bbox_max_lat") <= int(b[3] * _FP))
-            )
-    if has_py:
-        fast_node = F.lit(False)
-        fast_way = F.lit(False)
-        fast_rel = F.lit(False)
-    may_demote = aoi is not None and aoi.polygon is not None
-    typed = (
-        typed.withColumn("_fastn", fast_node)
-        .withColumn("_fastw", fast_way)
-        .withColumn("_fastr", fast_rel)
-        .withColumn(
-            "_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr")
-        )
+    # relation fast path: members are node/way only (multipolygon-typed
+    # versions are handled IN the vectorized kernel — per-state is_area
+    # routes them through assemble_multipolygon on resolved flat chains,
+    # with the geometry-collection fallback). coalesce: IN over a missing
+    # map key is NULL, and exists() over nulls is NULL — which would
+    # silently null out the kind and drop the doc from every path
+    fast_rel = (F.col("entity_type") == "relation") & ~F.expr(
+        "exists(membersR,"
+        " m -> not coalesce(m.entity_type in ('node', 'way'), false))"
     )
-    # fast-way/relation docs under a polygon AOI may demote to the
-    # general path (kernel-side exact 3-state), so they keep their spans;
-    # fast nodes never demote (their polygon test is exact in the
-    # vectorized path). The store keeps every doc's spans: a later query
-    # may route ANY doc to the general path (python filters).
-    spans_keep = (
-        F.lit(True)
-        if store_mode
-        else ((~F.col("_fastn")) if may_demote else (~F.col("_fast")))
+    typed = typed.withColumn(
+        "flat_kind",
+        F.when(fast_node, F.lit("node"))
+        .when(fast_way, F.lit("way"))
+        .when(fast_rel, F.lit("relation")),
     )
+    is_way = F.col("flat_kind").eqNullSafe("way")
     # second barrier: sort the OWN versions (index natural-sort over the
     # bound array — struct(ts, ver, i) keys are fully orderable, then
     # gather by i; no interpreted comparator, no re-decode) and
     # materialize the sorted member histories (they feed 7 flat member
-    # columns below).
+    # columns below). Relation member versions are NOT sorted JVM-side:
+    # an array_sort index-gather would re-materialize every member struct
+    # (tags maps + ref arrays) a second time; the kernel's
+    # _flat_rel_arrays sorts the flat primitive arrays with one numpy
+    # lexsort instead (free when the store is already version-ordered).
     sorted_versions = F.expr(
         "transform(array_sort(transform(versions,"
         " (v, i) -> struct(v.ts as ts, v.version as ver, i as i))),"
         " k -> versions[k.i])"
     )
     others = [c for c in typed.columns if c != "versions"]
-    second_barrier = [
+    typed = typed.select(
         *others,
         sorted_versions.alias("versions"),
-        (
-            F.when(F.col("_fastw"), F.expr(_MSORT))
-            if fast_ways
-            else F.lit(None).cast(
-                "array<array<struct<ts:string,ver:int,vis:boolean,"
-                "lon:bigint,lat:bigint,cs:bigint,uid:int>>>"
-            )
-        ).alias("_ms"),
-    ]
-    # relation member versions are NOT sorted JVM-side: an array_sort
-    # index-gather would re-materialize every member struct (tags maps +
-    # ref arrays) a second time; the kernel's _flat_rel_arrays sorts the
-    # flat primitive arrays with one numpy lexsort instead (free when the
-    # store is already version-ordered).
-    typed = typed.select(
-        *second_barrier,
+        F.when(is_way, F.expr(_MSORT)).alias("_ms"),
         F.monotonically_increasing_id().alias("_barrier2"),
     )
 
-    def arr(expr_sql: str):
-        # store mode: UNGATED — every doc's flat arrays are materialized
-        # (a later query decides which docs run fast; general-path docs
-        # simply get them re-gated to null at read time)
-        if store_mode:
-            return F.expr(expr_sql)
-        return F.when(F.col("_fast"), F.expr(expr_sql))
-
     def warr(expr_sql: str):
-        return F.when(F.col("_fastw"), F.expr(expr_sql))
+        return F.when(is_way, F.expr(expr_sql))
 
-    ts_expr = (
-        "transform(versions, v -> " + _TS_PARSE.format("v") + ")"
-    )
-    match_expr = None
-    if preds:
-        conj = " and ".join(f"({p})" for p in preds)
-        match_expr = f"transform(versions, v -> coalesce({conj}, false))"
+    def rarr(expr_sql: str):
+        return F.when(F.col("flat_kind").eqNullSafe("relation"), F.expr(expr_sql))
+
     mem_ts = (
         "flatten(transform(_ms, vs -> transform(vs, v -> "
         + _TS_PARSE.format("v")
         + ")))"
     )
-    out_cols = [
-        *base,
-        F.when(spans_keep, spans_col).alias("spans"),
-        F.when(F.col("_fastn"), F.lit("node"))
-        .when(F.col("_fastw"), F.lit("way"))
-        .when(F.col("_fastr"), F.lit("relation"))
-        .alias("flat_kind" if store_mode else "fast_kind"),
-        arr(ts_expr).alias("vts"),
-        arr("versions.version").alias("vversion"),
-        arr("versions.visible").alias("vvisible"),
-        arr("versions.changeset").alias("vchangeset"),
-        arr("versions.uid").alias("vuid"),
-        arr("versions.lon").alias("vlon"),
-        arr("versions.lat").alias("vlat"),
-        arr("transform(versions, v -> to_json(v.tags))").alias("vtags"),
-    ]
-    if not store_mode:
-        out_cols.append(
-            (
-                arr(match_expr)
-                if match_expr
-                else F.lit(None).cast("array<boolean>")
-            ).alias("vmatch")
-        )
-    out_cols += [
+    rmem_ts = (
+        "flatten(transform(membersR, m -> transform(m.versions, v -> "
+        + _TS_PARSE.format("v")
+        + ")))"
+    )
+    return typed.select(
+        *_BASE,
+        "spans",
+        "flat_kind",
+        F.expr(
+            "transform(versions, v -> " + _TS_PARSE.format("v") + ")"
+        ).alias("vts"),
+        F.expr("versions.version").alias("vversion"),
+        F.expr("versions.visible").alias("vvisible"),
+        F.expr("versions.changeset").alias("vchangeset"),
+        F.expr("versions.uid").alias("vuid"),
+        F.expr("versions.lon").alias("vlon"),
+        F.expr("versions.lat").alias("vlat"),
+        F.expr("transform(versions, v -> to_json(v.tags))").alias("vtags"),
         # way fast-path extras: per-version refs + flat member histories
         warr(
             "transform(versions, v -> size(coalesce(v.refs, array())))"
@@ -595,98 +369,163 @@ def _fast_projection(
         ).alias("mlat"),
         warr("flatten(transform(_ms, vs -> vs.cs))").alias("mcs"),
         warr("flatten(transform(_ms, vs -> vs.uid))").alias("muid"),
+        # relation own refs keep their TYPE (node/way/other) so the
+        # kernel resolves each to the right member table
+        rarr(
+            "transform(versions, v -> size(coalesce(v.refs, array())))"
+        ).alias("rvrefcnt"),
+        rarr(
+            "flatten(transform(versions,"
+            " v -> transform(coalesce(v.refs, array()), r -> r.ref)))"
+        ).alias("rvref"),
+        rarr(
+            "flatten(transform(versions,"
+            " v -> transform(coalesce(v.refs, array()),"
+            " r -> case when r.type = 'node' then 0"
+            " when r.type = 'way' then 1 else 2 end)))"
+        ).alias("rvreftype"),
+        # roles feed the multipolygon outer/inner split
+        # (BaseTagInterpreter.java:139-151 via the area decider)
+        rarr(
+            "flatten(transform(versions,"
+            " v -> transform(coalesce(v.refs, array()),"
+            " r -> coalesce(r.role, ''))))"
+        ).alias("rvrefrole"),
+        rarr("transform(membersR, m -> m.id)").alias("rmid"),
+        rarr(
+            "transform(membersR,"
+            " m -> case when m.entity_type = 'node' then 0 else 1 end)"
+        ).alias("rmtype"),
+        rarr("transform(membersR, m -> size(m.versions))").alias("rmvcnt"),
+        rarr(rmem_ts).alias("rmts"),
+        rarr(
+            "flatten(transform(membersR, m -> m.versions.version))"
+        ).alias("rmver"),
+        rarr(
+            "flatten(transform(membersR, m -> m.versions.visible))"
+        ).alias("rmvis"),
+        rarr(
+            "flatten(transform(membersR, m -> transform(m.versions,"
+            f" v -> coalesce(v.lon, cast({_LON_SENTINEL} as bigint)))))"
+        ).alias("rmlon"),
+        rarr(
+            "flatten(transform(membersR, m -> transform(m.versions,"
+            f" v -> coalesce(v.lat, cast({_LON_SENTINEL} as bigint)))))"
+        ).alias("rmlat"),
+        rarr(
+            "flatten(transform(membersR, m -> m.versions.changeset))"
+        ).alias("rmcs"),
+        rarr(
+            "flatten(transform(membersR, m -> m.versions.uid))"
+        ).alias("rmuid"),
+        # tags ride only for WAY member versions (the area decision);
+        # node member tags are never read by the kernel — nulls keep the
+        # flat offsets aligned without per-version to_json cost
+        rarr(
+            "flatten(transform(membersR, m ->"
+            " case when m.entity_type = 'way'"
+            " then transform(m.versions, v -> to_json(v.tags))"
+            " else transform(m.versions, v -> cast(null as string)) end))"
+        ).alias("rmtags"),
+        # third level: way-member version ref-id lists (flat)
+        rarr(
+            "flatten(transform(membersR, m -> transform(m.versions,"
+            " v -> size(coalesce(v.refs, array())))))"
+        ).alias("rmrefcnt"),
+        rarr(
+            "flatten(transform(membersR, m -> flatten(transform("
+            "m.versions,"
+            " v -> transform(coalesce(v.refs, array()), r -> r.ref)))))"
+        ).alias("rmref"),
+        # the sorted nested versions ride along for the SQL path
+        # (versions_table) and the query-time vmatch/prefilter
+        "versions",
+    )
+
+
+def _routed_docs(
+    docs: DataFrame,
+    filter_spec,
+    aoi: AOI | None,
+    fast_ways: bool,
+    fast_rels: str | None,
+) -> DataFrame:
+    """The routing site: per-query gating of encoded docs — routing flags,
+    the filter's vmatch, and when()-gating of the flat arrays. Structural
+    facts were frozen by the encoder as ``flat_kind``; query-dependent
+    conditions (AOI bbox containment, python filters, decider mode)
+    compose on top here."""
+    from .filters import _version_pred_sql
+
+    inside = None
+    if aoi is not None and not aoi.is_world:
+        # way/relation fast paths handle only docs whose bbox is inside
+        # the AOI bbox (no clip step); boundary-crossing docs keep the
+        # general per-doc path
+        b = aoi.bbox
+        inside = (
+            (F.col("bbox_min_lon") >= int(b[0] * _FP))
+            & (F.col("bbox_max_lon") <= int(b[2] * _FP))
+            & (F.col("bbox_min_lat") >= int(b[1] * _FP))
+            & (F.col("bbox_max_lat") <= int(b[3] * _FP))
+        )
+    # eqNullSafe: flat_kind is NULL for structurally-unroutable docs, and
+    # a plain == would propagate that NULL into _fast and silently null
+    # out the spans gate (dropping the doc from the general path)
+    fast_node = F.col("flat_kind").eqNullSafe("node")
+    fast_way = F.col("flat_kind").eqNullSafe("way")
+    if inside is not None:
+        fast_way = fast_way & inside
+    if not fast_ways:
+        fast_way = F.lit(False)
+    fast_rel = F.lit(False)
+    if fast_rels:
+        fast_rel = F.col("flat_kind").eqNullSafe("relation")
+        if inside is not None:
+            fast_rel = fast_rel & inside
+    if any(s[0] == "py" for s in (filter_spec or [])):
+        fast_node = F.lit(False)
+        fast_way = F.lit(False)
+        fast_rel = F.lit(False)
+    may_demote = aoi is not None and aoi.polygon is not None
+    typed = (
+        docs.withColumn("_fastn", fast_node)
+        .withColumn("_fastw", fast_way)
+        .withColumn("_fastr", fast_rel)
+        .withColumn(
+            "_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr")
+        )
+    )
+    # fast-way/relation docs under a polygon AOI may demote to the
+    # general path (kernel-side exact 3-state), so they keep their spans;
+    # fast nodes never demote (their polygon test is exact in the
+    # vectorized path)
+    spans_keep = (~F.col("_fastn")) if may_demote else (~F.col("_fast"))
+    preds = [
+        p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p
+    ]
+    match_expr = None
+    if preds:
+        conj = " and ".join(f"({p})" for p in preds)
+        match_expr = f"transform(versions, v -> coalesce({conj}, false))"
+    out_cols = [
+        *_BASE,
+        F.when(spans_keep, F.col("spans")).alias("spans"),
+        F.when(F.col("_fastn"), F.lit("node"))
+        .when(F.col("_fastw"), F.lit("way"))
+        .when(F.col("_fastr"), F.lit("relation"))
+        .alias("fast_kind"),
+        *[F.when(F.col("_fast"), F.col(c)).alias(c) for c in _V_COLS],
+        (
+            F.when(F.col("_fast"), F.expr(match_expr))
+            if match_expr
+            else F.lit(None).cast("array<boolean>")
+        ).alias("vmatch"),
+        *[F.when(F.col("_fastw"), F.col(c)).alias(c) for c in _W_COLS],
     ]
     if fast_rels:
-
-        def rarr(expr_sql: str):
-            return F.when(F.col("_fastr"), F.expr(expr_sql))
-
-        rmem_ts = (
-            "flatten(transform(membersR, m -> transform(m.versions, v -> "
-            + _TS_PARSE.format("v")
-            + ")))"
-        )
         out_cols += [
-            # relation own refs keep their TYPE (node/way/other) so the
-            # kernel resolves each to the right member table
-            rarr(
-                "transform(versions, v -> size(coalesce(v.refs, array())))"
-            ).alias("rvrefcnt"),
-            rarr(
-                "flatten(transform(versions,"
-                " v -> transform(coalesce(v.refs, array()), r -> r.ref)))"
-            ).alias("rvref"),
-            rarr(
-                "flatten(transform(versions,"
-                " v -> transform(coalesce(v.refs, array()),"
-                " r -> case when r.type = 'node' then 0"
-                " when r.type = 'way' then 1 else 2 end)))"
-            ).alias("rvreftype"),
-            # roles feed the multipolygon outer/inner split
-            # (BaseTagInterpreter.java:139-151 via the area decider)
-            rarr(
-                "flatten(transform(versions,"
-                " v -> transform(coalesce(v.refs, array()),"
-                " r -> coalesce(r.role, ''))))"
-            ).alias("rvrefrole"),
-            rarr("transform(membersR, m -> m.id)").alias("rmid"),
-            rarr(
-                "transform(membersR,"
-                " m -> case when m.entity_type = 'node' then 0 else 1 end)"
-            ).alias("rmtype"),
-            rarr("transform(membersR, m -> size(m.versions))").alias("rmvcnt"),
-            rarr(rmem_ts).alias("rmts"),
-            rarr(
-                "flatten(transform(membersR, m -> m.versions.version))"
-            ).alias("rmver"),
-            rarr(
-                "flatten(transform(membersR, m -> m.versions.visible))"
-            ).alias("rmvis"),
-            rarr(
-                "flatten(transform(membersR, m -> transform(m.versions,"
-                f" v -> coalesce(v.lon, cast({_LON_SENTINEL} as bigint)))))"
-            ).alias("rmlon"),
-            rarr(
-                "flatten(transform(membersR, m -> transform(m.versions,"
-                f" v -> coalesce(v.lat, cast({_LON_SENTINEL} as bigint)))))"
-            ).alias("rmlat"),
-            rarr(
-                "flatten(transform(membersR, m -> m.versions.changeset))"
-            ).alias("rmcs"),
-            rarr(
-                "flatten(transform(membersR, m -> m.versions.uid))"
-            ).alias("rmuid"),
-            # tags ride only for WAY member versions (the area decision);
-            # node member tags are never read by the kernel — nulls keep
-            # the flat offsets aligned without per-version to_json cost
-            rarr(
-                "flatten(transform(membersR, m ->"
-                " case when m.entity_type = 'way'"
-                " then transform(m.versions, v -> to_json(v.tags))"
-                " else transform(m.versions, v -> cast(null as string)) end))"
-            ).alias("rmtags"),
-            # third level: way-member version ref-id lists (flat)
-            rarr(
-                "flatten(transform(membersR, m -> transform(m.versions,"
-                " v -> size(coalesce(v.refs, array())))))"
-            ).alias("rmrefcnt"),
-            rarr(
-                "flatten(transform(membersR, m -> flatten(transform("
-                "m.versions,"
-                " v -> transform(coalesce(v.refs, array()), r -> r.ref)))))"
-            ).alias("rmref"),
-        ]
-    if store_mode:
-        # the sorted nested versions ride along for the SQL path
-        # (versions_table) and read-time vmatch/prefilter; structural
-        # has_mp_type lets mode-'default' queries rule out multipolygon
-        # assembly without touching the nested column
-        out_cols += [
-            F.col("versions"),
-            F.expr(
-                "exists(versions, v -> coalesce("
-                "v.tags['type'] in ('multipolygon', 'boundary'), false))"
-            ).alias("has_mp_type"),
+            F.when(F.col("_fastr"), F.col(c)).alias(c) for c in _R_COLS
         ]
     return typed.select(*out_cols)
 
@@ -1312,32 +1151,31 @@ def _route_way_fast(pdf: pd.DataFrame, way_mask: np.ndarray, aoi: AOI):
     return vec, dem
 
 
-def snapshots(
+def _routed_kernel(
     docs: DataFrame,
-    timestamps: list[int],
-    bbox=None,
-    polygon=None,
-    filter_spec=None,
-    area_decider=None,
-    with_geometry: bool = True,
+    filter_spec,
+    aoi: AOI,
+    decider,
+    node_vec,
+    way_vec,
+    rel_vec,
+    emit,
+    cols: list[str],
+    schema,
 ) -> DataFrame:
-    """The snapshot view: one row per (entity, requested timestamp) where
-    the entity exists, is visible, matches the filter, and intersects the
-    AOI. Returns a DataFrame with schema model.schemas.SNAPSHOTS.
+    """The routed kernel shared by snapshots() and contributions():
+    prepared_docs with the fast paths the query can take, then per Arrow
+    batch the ``fast_kind`` dispatch — ``node_vec``/``way_vec``/
+    ``rel_vec`` (pdf → frame of ``cols``) on their routes, ``emit(row,
+    out, token)`` per doc on the general path, which also takes way and
+    relation docs the polygon 3-state demotes.
 
-    Member-less node docs run through the vectorized numpy path
-    (_nodes_snapshot_vec); ways/relations/python-filtered docs go through
-    the general per-doc path."""
-    aoi = AOI(bbox=bbox, polygon=polygon)
-    decider = area_decider or DEFAULT_INTERPRETER
-    requested = sorted(timestamps)
-    flt = compile_python(filter_spec)
-    # way/relation fast paths: any AOI (bbox AND polygon — the kernel's
-    # exact 3-state keeps fully-inside docs vectorized and demotes
-    # boundary docs), as long as the area decider is a vectorizable
-    # built-in; relations additionally need a decider mode that can rule
-    # out multipolygon assembly JVM-side (relation_vec.rel_fast_mode)
-    from .relation_vec import rel_fast_mode, rels_snapshot_vec
+    Way/relation fast paths serve any AOI (bbox AND polygon — the
+    kernel's exact 3-state keeps fully-inside docs vectorized and demotes
+    boundary docs) as long as the area decider is a vectorizable
+    built-in; relations additionally need a decider mode that can rule
+    out multipolygon assembly JVM-side (relation_vec.rel_fast_mode)."""
+    from .relation_vec import rel_fast_mode
 
     types = _allowed_types(filter_spec)
     fast_ways = _vectorizable_decider(decider) and (
@@ -1366,38 +1204,63 @@ def snapshots(
             gen_mask = (
                 ~(node_mask | way_raw | rel_raw) | way_demote | rel_demote
             )
-            frames = []
-            if node_mask.any():
-                frames.append(
-                    _nodes_snapshot_vec(
-                        pdf[node_mask], requested, aoi, with_geometry
-                    )
+            frames = [
+                vec(pdf[mask])
+                for mask, vec in (
+                    (node_mask, node_vec), (way_mask, way_vec),
+                    (rel_mask, rel_vec),
                 )
-            if way_mask.any():
-                frames.append(
-                    _ways_snapshot_vec(
-                        pdf[way_mask], requested, with_geometry, decider
-                    )
-                )
-            if rel_mask.any():
-                frames.append(
-                    rels_snapshot_vec(
-                        pdf[rel_mask], requested, with_geometry, decider
-                    )
-                )
+                if mask.any()
+            ]
             if gen_mask.any():
                 gpdf = pdf[gen_mask]
-                gtoks = _doc_tokens(gpdf)
                 out: list[tuple] = []
-                for row, tok in zip(gpdf.to_dict("records"), gtoks):
-                    _emit_doc_snapshots(
-                        row, requested, aoi, flt, decider, with_geometry, out,
-                        token=tok,
-                    )
-                frames.append(pd.DataFrame(out, columns=_SNAP_COLS))
-            yield pd.concat(frames, ignore_index=True) if frames else _empty_frame(_SNAP_COLS)
+                for row, tok in zip(gpdf.to_dict("records"), _doc_tokens(gpdf)):
+                    emit(row, out, tok)
+                frames.append(pd.DataFrame(out, columns=cols))
+            yield pd.concat(frames, ignore_index=True) if frames else _empty_frame(cols)
 
-    return typed.mapInPandas(kernel, schema=schemas.SNAPSHOTS)
+    return typed.mapInPandas(kernel, schema=schema)
+
+
+def snapshots(
+    docs: DataFrame,
+    timestamps: list[int],
+    bbox=None,
+    polygon=None,
+    filter_spec=None,
+    area_decider=None,
+    with_geometry: bool = True,
+) -> DataFrame:
+    """The snapshot view: one row per (entity, requested timestamp) where
+    the entity exists, is visible, matches the filter, and intersects the
+    AOI. Returns a DataFrame with schema model.schemas.SNAPSHOTS.
+
+    Node, way and relation docs of the fast shapes run through the
+    vectorized numpy paths (_nodes_snapshot_vec and siblings); the rest, and
+    every doc under a python filter, go through the general per-doc path
+    (routing: _routed_kernel)."""
+    aoi = AOI(bbox=bbox, polygon=polygon)
+    decider = area_decider or DEFAULT_INTERPRETER
+    requested = sorted(timestamps)
+    flt = compile_python(filter_spec)
+    from .relation_vec import rels_snapshot_vec
+
+    return _routed_kernel(
+        docs, filter_spec, aoi, decider,
+        node_vec=lambda p: _nodes_snapshot_vec(p, requested, aoi, with_geometry),
+        way_vec=lambda p: _ways_snapshot_vec(
+            p, requested, with_geometry, decider
+        ),
+        rel_vec=lambda p: rels_snapshot_vec(
+            p, requested, with_geometry, decider
+        ),
+        emit=lambda row, out, tok: _emit_doc_snapshots(
+            row, requested, aoi, flt, decider, with_geometry, out, token=tok
+        ),
+        cols=_SNAP_COLS,
+        schema=schemas.SNAPSHOTS,
+    )
 
 
 def _emit_doc_snapshots(row, requested, aoi, flt, decider, with_geometry, out,

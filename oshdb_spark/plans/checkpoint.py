@@ -63,7 +63,7 @@ class Pipeline:
         lazily; it is not invoked at all when the checkpoint is complete.
 
         external=True: `fn(dpath)` performs its own write to the stage
-        data path (e.g. layout.write_docs_store with custom partitioning);
+        data path (e.g. layout.write_typed_store with custom partitioning);
         the pipeline only records the manifest."""
         dpath, mpath = self._paths(stage)
         if not force and self.is_complete(stage):

@@ -19,7 +19,7 @@ partition pruning:
 
 This sandbox has no Iceberg jars, so the writer targets partitioned
 parquet through the same API shape (`partitionBy(cell_prefix)`); on a real
-cluster swap `write_docs_store`'s final call for
+cluster swap the final write of `_write_cells` for
 `df.writeTo(table).partitionedBy(col)`.
 """
 
@@ -32,46 +32,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..geo import cells
-from ..kernels.snapshot import with_doc_bbox
-from ..model import docs as docs_mod
 
-# Bumped whenever the flat kernel projection (_fast_projection store
-# mode) changes shape — readers refuse mismatched stores instead of
-# failing mid-query with UNRESOLVED_COLUMN. v2: + rvrefrole (member
-# roles feed in-kernel multipolygon assembly).
-STORE_SCHEMA_VERSION = 2
-
-
-def with_cell_token(docs: DataFrame, prefix_len: int = 2) -> DataFrame:
-    """docs + `cell` (insert-level Hilbert token) + `cell_prefix` columns.
-
-    Token via the vectorized insert rule over doc bboxes (pandas UDF —
-    numpy arrays in/out, no per-row python)."""
-    typed = with_doc_bbox(docs_mod.typed_docs(docs))
-
-    @F.pandas_udf(T.StringType())
-    def tok(minlon: pd.Series, minlat: pd.Series, maxlon: pd.Series, maxlat: pd.Series) -> pd.Series:
-        ml = minlon.to_numpy(dtype=np.float64)
-        out = np.empty(len(ml), dtype=object)
-        valid = ~np.isnan(ml)
-        if valid.any():
-            out[valid] = cells.token_of_bboxes(
-                minlon[valid].to_numpy(dtype=np.int64),
-                minlat[valid].to_numpy(dtype=np.int64),
-                maxlon[valid].to_numpy(dtype=np.int64),
-                maxlat[valid].to_numpy(dtype=np.int64),
-            )
-        out[~valid] = ""
-        return pd.Series(out)
-
-    return (
-        typed.withColumn(
-            "cell",
-            tok("bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat"),
-        )
-        .withColumn("cell_prefix", F.expr(f"rpad(substring(cell, 1, {prefix_len}), {prefix_len}, '0')"))
-        .select("doc_id", "spans", "cell", "cell_prefix")
-    )
+# Bumped whenever the encoder's projection (kernels.snapshot.encode_docs)
+# changes shape — readers refuse mismatched stores instead of failing
+# mid-query with UNRESOLVED_COLUMN. v2: + rvrefrole (member roles feed
+# in-kernel multipolygon assembly). v3: drops the multipolygon-type flag
+# column no reader used.
+STORE_SCHEMA_VERSION = 3
 
 
 def salt_plan(
@@ -81,8 +48,12 @@ def salt_plan(
     target_rows). One tiny aggregation; result is broadcast-sized (≤ 4^L
     prefixes)."""
     hist = df.groupBy(key).agg(F.count(F.lit(1)).alias("n")).collect()
+    return _salts({r[key]: r["n"] for r in hist}, target_rows)
+
+
+def _salts(rows_per_key: dict[str, int], target_rows: int) -> dict[str, int]:
     return {
-        r[key]: max(1, int(-(-r["n"] // target_rows))) for r in hist
+        k: max(1, int(-(-n // target_rows))) for k, n in rows_per_key.items()
     }
 
 
@@ -107,54 +78,65 @@ def with_salt(
     )
 
 
-def write_docs_store(
-    docs: DataFrame,
+def _write_cells(
+    df: DataFrame,
     path: str,
-    prefix_len: int = 2,
-    target_rows: int = 100_000,
+    target_rows: int,
     manifest_level: int = 6,
-) -> dict:
-    """Write the canonical partitioned docs store:
-    partition dirs by cell_prefix, files shuffled by (prefix, salt),
-    rows sorted by full Hilbert token (spatial locality within files).
+    dynamic: bool = False,
+) -> tuple[dict[str, int], dict[str, int]]:
+    """The store write tail: partition dirs by cell_prefix, files shuffled
+    by (prefix, salt), rows sorted by full Hilbert token (spatial locality
+    within files). ``dynamic`` overwrites only the partitions ``df``
+    holds.
 
-    Alongside the data, a `_manifest/cell_counts.json` histogram of doc
-    counts per cell at `manifest_level` is written — the metadata that
-    lets kNN pick its proven radius (geo.spatial_join.knn_batch) WITHOUT
-    scanning the table (at 10^12 docs the histogram is the analog of
-    Iceberg partition stats). Returns the salt plan (lineage manifest)."""
+    ONE aggregate over (cell_prefix, manifest cell) yields both the salt
+    histogram and the cell-count manifest, so the input is evaluated
+    twice (aggregate + write). Docs whose insert-level token is SHORTER
+    than manifest_level span several manifest cells; rpad-assigning them
+    to the SW '0…' child would locally OVERstate that cell's count, and
+    knn_batch's proven-radius rule (geo.spatial_join) treats counts as
+    upper bounds per cell — overstating can stop radius expansion too
+    early and break exactness. Excluding them only UNDERcounts, which
+    merely grows the radius (still exact); the final disk scan sees every
+    row anyway. Returns (salt plan, manifest counts)."""
+    cell = F.when(
+        F.length("cell") >= manifest_level,
+        F.expr(f"substring(cell, 1, {manifest_level})"),
+    )
+    per_prefix: dict[str, int] = {}
+    counts: dict[str, int] = {}
+    for r in (
+        df.groupBy("cell_prefix", cell.alias("_c"))
+        .agg(F.count(F.lit(1)).alias("n")).collect()
+    ):
+        per_prefix[r["cell_prefix"]] = per_prefix.get(r["cell_prefix"], 0) + r["n"]
+        if r["_c"] is not None:
+            counts[r["_c"]] = counts.get(r["_c"], 0) + r["n"]
+    plan = _salts(per_prefix, target_rows)
+    (
+        with_salt(df.drop("cell_salt"), plan)
+        .repartition(F.col("cell_prefix"), F.col("cell_salt"))
+        .sortWithinPartitions("cell")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic" if dynamic else "static")
+        .partitionBy("cell_prefix")
+        .parquet(path)
+    )
+    return plan, counts
+
+
+def _write_cell_counts(path: str, level: int, counts: dict[str, int]) -> None:
+    """`_manifest/cell_counts.json`: doc counts per cell at `level` — the
+    metadata that lets kNN pick its proven radius (geo.spatial_join.
+    knn_batch) WITHOUT scanning the table (at 10^12 docs the histogram is
+    the analog of Iceberg partition stats)."""
     import json
     import os
 
-    toked = with_cell_token(docs, prefix_len)
-    plan = salt_plan(toked, target_rows=target_rows)
-    out = (
-        with_salt(toked, plan)
-        .repartition(F.col("cell_prefix"), F.col("cell_salt"))
-        .sortWithinPartitions("cell")
-    )
-    out.write.mode("overwrite").partitionBy("cell_prefix").parquet(path)
-    # Docs whose insert-level token is SHORTER than manifest_level span
-    # several manifest cells; rpad-assigning them to the SW '0…' child
-    # would locally OVERstate that cell's count, and knn_batch's proven-
-    # radius rule (geo.spatial_join) treats counts as upper bounds per
-    # cell — overstating can stop radius expansion too early and break
-    # exactness. Excluding them only UNDERcounts, which merely grows the
-    # radius (still exact); the final disk scan sees every row anyway.
-    counts = (
-        toked.filter(F.length("cell") >= manifest_level)
-        .withColumn("_c", F.expr(f"substring(cell, 1, {manifest_level})"))
-        .groupBy("_c").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
     os.makedirs(f"{path}/_manifest", exist_ok=True)
     with open(f"{path}/_manifest/cell_counts.json", "w") as f:
-        json.dump(
-            {"level": manifest_level, "counts": {r["_c"]: r["n"] for r in counts}},
-            f,
-        )
-    with open(f"{path}/_manifest/schema_version", "w") as f:
-        f.write(str(STORE_SCHEMA_VERSION))
-    return plan
+        json.dump({"level": level, "counts": counts}, f)
 
 
 @F.pandas_udf(T.StringType())
@@ -179,13 +161,9 @@ def _typed_tokenized(docs: DataFrame, prefix_len: int) -> DataFrame:
     cell token + fixed-length partition prefix. Shared by the full ETL
     (write_typed_store) and the incremental merge (update_typed_store) so
     the two paths can never diverge."""
-    from ..kernels.snapshot import prepared_docs
+    from ..kernels.snapshot import encode_docs
 
-    typed = prepared_docs(
-        docs, None, None, fast_arrays=True, fast_ways=True,
-        fast_rels="never", store_mode=True,
-    )
-    return typed.withColumn(
+    return encode_docs(docs).withColumn(
         "cell",
         _tok_udf("bbox_min_lon", "bbox_min_lat", "bbox_max_lon", "bbox_max_lat"),
     ).withColumn(
@@ -205,42 +183,25 @@ def write_typed_store(
     spans are decoded ONCE here, at ETL time — the analog of the
     reference's ETL encoding OSH entities into binary cell blobs
     (oshdb-tool etl; grid tables store decoded history, not source XML).
-    The stored layout is the kernels' own flat-array projection
-    (kernels.snapshot._fast_projection in store mode): single-level
-    primitive parallel arrays (v*/m*/rm* — parquet+Arrow's best case),
-    parsed unix timestamps, pre-sorted versions, structural routing facts
-    (`flat_kind`, `has_mp_type`), the raw spans (general-path fallback),
-    and the sorted nested `versions` column for the pure-SQL path.
-    Deliberately NOT stored: nested `members` — double-nested structs
-    with maps defeat the parquet nested reader and the Arrow transfer
-    (measured 40× slower than flat on member-heavy docs).
+    The stored layout is the doc encoder's projection
+    (kernels.snapshot.encode_docs): single-level primitive parallel
+    arrays (v*/m*/rm* — parquet+Arrow's best case), parsed unix
+    timestamps, pre-sorted versions, the structural routing fact
+    `flat_kind`, the raw spans (general-path fallback), and the sorted
+    nested `versions` column for the pure-SQL path. Deliberately NOT
+    stored: nested `members` — double-nested structs with maps defeat the
+    parquet nested reader and the Arrow transfer (measured 40× slower
+    than flat on member-heavy docs).
 
     Queries over the store skip the whole per-query decode (from_json,
     ts parse, member flattening and sorting) and get parquet row-group
-    pruning on the stored doc-bbox columns for free. Same salting +
-    manifest discipline as write_docs_store. Returns the salt plan."""
-    import json
-    import os
-
-    toked = _typed_tokenized(docs, prefix_len)
-    plan = salt_plan(toked, target_rows=target_rows)
-    out = (
-        with_salt(toked, plan)
-        .repartition(F.col("cell_prefix"), F.col("cell_salt"))
-        .sortWithinPartitions("cell")
+    pruning on the stored doc-bbox columns for free. Alongside the data,
+    `_manifest/` holds the cell-count histogram at `manifest_level`, the
+    schema version and the snapshot log. Returns the salt plan."""
+    plan, counts = _write_cells(
+        _typed_tokenized(docs, prefix_len), path, target_rows, manifest_level
     )
-    out.write.mode("overwrite").partitionBy("cell_prefix").parquet(path)
-    counts = (
-        toked.filter(F.length("cell") >= manifest_level)
-        .withColumn("_c", F.expr(f"substring(cell, 1, {manifest_level})"))
-        .groupBy("_c").agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    os.makedirs(f"{path}/_manifest", exist_ok=True)
-    with open(f"{path}/_manifest/cell_counts.json", "w") as f:
-        json.dump(
-            {"level": manifest_level, "counts": {r["_c"]: r["n"] for r in counts}},
-            f,
-        )
+    _write_cell_counts(path, manifest_level, counts)
     with open(f"{path}/_manifest/schema_version", "w") as f:
         f.write(str(STORE_SCHEMA_VERSION))
     _reset_snapshots(path)
@@ -286,28 +247,28 @@ def _reset_snapshots(path: str) -> None:
         json.dump([{"id": 1, "op": "write", "affected": None}], f)
 
 
-def _append_snapshot(path: str, affected: list[str]) -> int:
+def _append_snapshot(path: str, affected: list[str], swap):
+    """Commit one copy-on-write operation as snapshot `new_id`: copy the
+    current files of the partitions it replaces to `_archive/{new_id}` —
+    they ARE the pre-merge state of every version < new_id that no
+    earlier archive already pins — then run `swap()` (which replaces
+    them), then log the snapshot. Returns swap()'s result."""
     import json
-
-    snaps = store_snapshots(path)
-    nid = (snaps[-1]["id"] + 1) if snaps else 1
-    snaps.append({"id": nid, "op": "merge", "affected": sorted(affected)})
-    with open(_snapshots_file(path), "w") as f:
-        json.dump(snaps, f)
-    return nid
-
-
-def _archive_partitions(path: str, new_id: int, affected: list[str]) -> None:
-    """Copy the current files of the partitions a merge will replace to
-    `_archive/{new_id}` — they ARE the pre-merge state of every version
-    < new_id that no earlier archive already pins."""
     import os
     import shutil
 
+    snaps = store_snapshots(path)
+    # a store without a log holds only its initial write, snapshot 1
+    new_id = (snaps[-1]["id"] + 1) if snaps else 2
     for p in affected:
         src = f"{path}/cell_prefix={p}"
         if os.path.isdir(src):
             shutil.copytree(src, f"{path}/_archive/{new_id}/cell_prefix={p}")
+    out = swap()
+    snaps.append({"id": new_id, "op": "merge", "affected": sorted(affected)})
+    with open(_snapshots_file(path), "w") as f:
+        json.dump(snaps, f)
+    return out
 
 
 def _version_partition_dirs(path: str, version: int) -> list[tuple[str, str]]:
@@ -378,23 +339,17 @@ def compact_typed_store(
             "cell_prefix",
             F.lpad(F.col("cell_prefix").cast("string"), len(fat[0]), "0"),
         )
-        plan = salt_plan(sub, target_rows=target_rows)
-        out = (
-            with_salt(sub.drop("cell_salt"), plan)
-            .repartition(F.col("cell_prefix"), F.col("cell_salt"))
-            .sortWithinPartitions("cell")
-        )
-        out.write.partitionBy("cell_prefix").parquet(f"{tmp}/packed")
+        # content is unchanged, and so are the manifest counts
+        _write_cells(sub, f"{tmp}/packed", target_rows)
 
-        snaps = store_snapshots(path)
-        new_id = (snaps[-1]["id"] + 1) if snaps else 2
-        _archive_partitions(path, new_id, fat)
-        for p in fat:
-            shutil.rmtree(f"{path}/cell_prefix={p}")
-            shutil.move(
-                f"{tmp}/packed/cell_prefix={p}", f"{path}/cell_prefix={p}"
-            )
-        _append_snapshot(path, fat)
+        def swap():
+            for p in fat:
+                shutil.rmtree(f"{path}/cell_prefix={p}")
+                shutil.move(
+                    f"{tmp}/packed/cell_prefix={p}", f"{path}/cell_prefix={p}"
+                )
+
+        _append_snapshot(path, fat, swap)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return sorted(fat)
@@ -458,8 +413,6 @@ def update_typed_store(
     Returns {"affected_prefixes": [...], "plan": salt plan of the
     rewritten partitions}.
     """
-    import json
-    import os
     import shutil
     import tempfile
 
@@ -502,45 +455,24 @@ def update_typed_store(
         )
 
         merged = spark.read.parquet(f"{tmp}/merged")
-        plan = salt_plan(merged, target_rows=target_rows)
-        out = (
-            with_salt(merged, plan)
-            .repartition(F.col("cell_prefix"), F.col("cell_salt"))
-            .sortWithinPartitions("cell")
-        )
         # snapshot isolation: archive the pre-merge bytes of every
         # partition the dynamic overwrite is about to delete, THEN swap
-        snaps = store_snapshots(path)
-        new_id = (snaps[-1]["id"] + 1) if snaps else 2
-        _archive_partitions(path, new_id, affected)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy("cell_prefix").parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        _append_snapshot(path, affected)
-
-        counts = (
-            merged.filter(F.length("cell") >= manifest_level)
-            .withColumn("_c", F.expr(f"substring(cell, 1, {manifest_level})"))
-            .groupBy("_c").agg(F.count(F.lit(1)).alias("n")).collect()
+        plan, counts = _append_snapshot(
+            path, affected,
+            lambda: _write_cells(
+                merged, path, target_rows, manifest_level, dynamic=True
+            ),
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    mf = f"{path}/_manifest/cell_counts.json"
-    manifest = {"level": manifest_level, "counts": {}}
-    if os.path.exists(mf):
-        with open(mf) as f:
-            manifest = json.load(f)
+    old = read_cell_counts(path) or {"counts": {}}
     kept = {
-        tok: n for tok, n in manifest["counts"].items()
+        tok: n for tok, n in old["counts"].items()
         if tok[:prefix_len] not in set(affected)
     }
-    kept.update({r["_c"]: r["n"] for r in counts})
-    with open(mf, "w") as f:
-        json.dump({"level": manifest_level, "counts": kept}, f)
+    kept.update(counts)
+    _write_cell_counts(path, manifest_level, kept)
     return {"affected_prefixes": affected, "plan": plan}
 
 
@@ -636,24 +568,3 @@ def read_cell_counts(path: str) -> dict | None:
         return None
     with open(p) as f:
         return json.load(f)
-
-
-def read_docs_store(
-    spark: SparkSession, path: str, bbox=None, prefix_len: int = 2,
-    polygon=None,
-) -> DataFrame:
-    """Read the store with cell-prefix partition pruning for a bbox AOI.
-
-    cover_prefixes(bbox) yields ancestor tokens of ≤ prefix_len chars; the
-    emitted predicate prunes partition directories before any file I/O
-    (check `.explain`: PartitionFilters). Feature tokens SHORTER than
-    prefix_len (features spanning several prefix cells) are stored under
-    their zero-padded prefix; the cover therefore also includes every
-    ancestor-run prefix range. The doc-level exactness re-check happens in
-    the kernels, so over-selection here is only a performance matter.
-    ``polygon`` refines the cover to polygon-touching cells (see
-    read_typed_store)."""
-    df = spark.read.parquet(path)
-    if bbox is None:
-        return df
-    return _prefix_pruned(df, bbox, prefix_len, polygon)

@@ -10,11 +10,11 @@ from pyspark.sql import functions as F
 from oshdb_spark.model.history import SNAPSHOT_TS, docs_from_events
 from oshdb_spark.plans.checkpoint import Pipeline
 from oshdb_spark.plans.layout import (
-    read_docs_store,
+    _typed_tokenized,
+    read_typed_store,
     salt_plan,
-    with_cell_token,
     with_salt,
-    write_docs_store,
+    write_typed_store,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -27,35 +27,37 @@ def docs(spark):
 
 def test_store_roundtrip_and_pruning(spark, docs, tmp_path):
     path = str(tmp_path / "store")
-    write_docs_store(docs, path, prefix_len=2, target_rows=5)
-    full = read_docs_store(spark, path)
+    write_typed_store(docs, path, prefix_len=2, target_rows=5)
+    full = read_typed_store(spark, path)
     assert full.count() == docs.count()
     # partition dirs exist
     parts = [d for d in os.listdir(path) if d.startswith("cell_prefix=")]
     assert len(parts) > 1
 
     bbox = (0.0, 0.0, 90.0, 60.0)
-    pruned = read_docs_store(spark, path, bbox=bbox)
+    pruned = read_typed_store(spark, path, bbox=bbox)
     # pruning must not lose any doc whose bbox intersects the AOI:
-    # compare snapshot results computed from pruned store vs raw docs
+    # compare snapshot results computed from the pruned store (typed
+    # input, and its stored spans re-decoded) vs raw docs
     from oshdb_spark.kernels.snapshot import snapshots
 
-    a = (
-        snapshots(pruned.select("doc_id", "spans"), SNAPSHOT_TS, bbox=bbox)
-        .groupBy("ts").count().orderBy("ts").collect()
-    )
-    b = (
-        snapshots(docs, SNAPSHOT_TS, bbox=bbox)
-        .groupBy("ts").count().orderBy("ts").collect()
-    )
-    assert [(r.ts, r["count"]) for r in a] == [(r.ts, r["count"]) for r in b]
+    def counts(d):
+        return [
+            (r.ts, r["count"])
+            for r in snapshots(d, SNAPSHOT_TS, bbox=bbox)
+            .groupBy("ts").count().orderBy("ts").collect()
+        ]
+
+    want = counts(docs)
+    assert counts(pruned) == want
+    assert counts(pruned.select("doc_id", "spans")) == want
     # and the partition filter really prunes (physical plan shows it)
     plan = pruned._jdf.queryExecution().executedPlan().toString()
     assert "cell_prefix" in plan
 
 
 def test_salting_bounds_partition_size(spark, docs):
-    toked = with_cell_token(docs)
+    toked = _typed_tokenized(docs, 2)
     # force extreme skew: everything in one prefix
     skew = toked.withColumn("cell_prefix", F.lit("00"))
     plan = salt_plan(skew, target_rows=3)
@@ -112,7 +114,7 @@ def test_pipeline_multi_stage_lineage(spark, docs, tmp_path):
 
 
 def test_store_manifest_cell_counts(spark, tmp_path):
-    """write_docs_store emits the cell-count histogram manifest. Docs whose
+    """write_typed_store emits the cell-count histogram manifest. Docs whose
     insert-level token is SHORTER than the manifest level (features
     spanning manifest cells) are excluded — the histogram is a LOWER
     bound per cell (knn_batch's proven-radius rule needs counts that
@@ -122,19 +124,15 @@ def test_store_manifest_cell_counts(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from oshdb_spark.model.history import docs_from_events
-    from oshdb_spark.plans.layout import (
-        read_cell_counts,
-        with_cell_token,
-        write_docs_store,
-    )
+    from oshdb_spark.plans.layout import read_cell_counts
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     docs = docs_from_events(ev)
     path = str(tmp_path / "store")
-    write_docs_store(docs, path, prefix_len=2)
+    write_typed_store(docs, path, prefix_len=2)
     m = read_cell_counts(path)
     assert m is not None and m["level"] == 6
-    deep = with_cell_token(docs).filter(F.length("cell") >= 6).count()
+    deep = _typed_tokenized(docs, 2).filter(F.length("cell") >= 6).count()
     assert sum(m["counts"].values()) == deep
     assert 0 < deep <= docs.count()
     assert all(len(t) == 6 for t in m["counts"])
@@ -148,25 +146,25 @@ def test_polygon_pruned_store_read(spark, docs, tmp_path):
     from oshdb_spark.kernels.snapshot import snapshots
 
     path = str(tmp_path / "pstore")
-    write_docs_store(docs, path, prefix_len=2, target_rows=5)
+    write_typed_store(docs, path, prefix_len=2, target_rows=5)
     poly = [np.array(
         [(-60.0, -60.0), (-40.0, -60.0), (60.0, 60.0), (40.0, 60.0),
          (-60.0, -60.0)], dtype=np.float64)]
     bbox = (-60.0, -60.0, 60.0, 60.0)
 
-    by_bbox = read_docs_store(spark, path, bbox=bbox)
-    by_poly = read_docs_store(spark, path, bbox=bbox, polygon=poly)
+    by_bbox = read_typed_store(spark, path, bbox=bbox)
+    by_poly = read_typed_store(spark, path, bbox=bbox, polygon=poly)
     assert by_poly.count() <= by_bbox.count()
 
-    a = (
-        snapshots(by_poly.select("doc_id", "spans"), SNAPSHOT_TS,
-                  bbox=bbox, polygon=poly)
-        .groupBy("ts").count().orderBy("ts").collect()
-    )
-    b = (
-        snapshots(docs, SNAPSHOT_TS, bbox=bbox, polygon=poly)
-        .groupBy("ts").count().orderBy("ts").collect()
-    )
-    assert [(r.ts, r["count"]) for r in a] == [(r.ts, r["count"]) for r in b]
+    def counts(d):
+        return [
+            (r.ts, r["count"])
+            for r in snapshots(d, SNAPSHOT_TS, bbox=bbox, polygon=poly)
+            .groupBy("ts").count().orderBy("ts").collect()
+        ]
+
+    want = counts(docs)
+    assert counts(by_poly) == want
+    assert counts(by_poly.select("doc_id", "spans")) == want
     plan = by_poly._jdf.queryExecution().executedPlan().toString()
     assert "cell_prefix" in plan

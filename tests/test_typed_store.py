@@ -376,3 +376,76 @@ def test_compaction_preserves_content_and_history(spark, tmp_path):
     ids = [s["id"] for s in store_snapshots(path)]
     assert ids == [1, 2]
     assert content(read_typed_store(spark, path, version=1)) == want
+
+
+@pytest.mark.parametrize(
+    "fast_arrays,fast_ways,fast_rels",
+    [
+        (False, False, None),
+        (True, False, None),
+        (True, True, None),
+        (True, True, "default"),
+        (True, True, "never"),
+    ],
+    ids=["nofast", "node", "way", "rel_default", "rel_never"],
+)
+@pytest.mark.parametrize(
+    "flt",
+    [None, [("tag_key", "a")], [NOOP]],
+    ids=["nofilter", "tagkey", "py"],
+)
+def test_prepared_docs_schema_same_for_every_input(
+    spark, stores, fast_arrays, fast_ways, fast_rels, flt
+):
+    """Raw (doc_id, spans), native-typed and typed-store input of the same
+    docs reach the kernels with one schema: same column names, order and
+    types, whatever the routing mode or filter. (Nullability is left out:
+    a parquet read marks every field nullable.)"""
+    from oshdb_spark.kernels.aoi import AOI
+    from oshdb_spark.kernels.snapshot import prepared_docs
+    from oshdb_spark.model.docs import typed_docs
+
+    def shape(docs):
+        df = prepared_docs(
+            docs, flt, AOI(bbox=(-60.0, -60.0, 60.0, 60.0)),
+            fast_arrays=fast_arrays, fast_ways=fast_ways, fast_rels=fast_rels,
+        )
+        return [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+
+    for kind in ("node", "way", "rel"):
+        raw, typed = stores[kind]
+        want = shape(raw)
+        assert shape(typed_docs(raw)) == want, kind
+        assert shape(typed) == want, kind
+    if fast_arrays:
+        assert [n for n, _ in want][:9] == [
+            "doc_id", "entity_type", "id", "bbox_min_lon", "bbox_min_lat",
+            "bbox_max_lon", "bbox_max_lat", "spans", "fast_kind",
+        ]
+
+
+def test_append_snapshot_archives_under_the_logged_id(tmp_path):
+    """The snapshot id that names a merge's archive is the id the log
+    records — with and without an existing snapshot log."""
+    import json
+    import os
+
+    from oshdb_spark.plans.layout import _append_snapshot, store_snapshots
+
+    for name, log in (("nolog", None), ("logged", [1])):
+        path = str(tmp_path / name)
+        os.makedirs(f"{path}/cell_prefix=01")
+        open(f"{path}/cell_prefix=01/part.parquet", "w").close()
+        os.makedirs(f"{path}/_manifest")
+        if log:
+            with open(f"{path}/_manifest/snapshots.json", "w") as f:
+                json.dump(
+                    [{"id": i, "op": "write", "affected": None} for i in log], f
+                )
+        assert _append_snapshot(path, ["01"], lambda: "swapped") == "swapped"
+        new_id = store_snapshots(path)[-1]["id"]
+        assert os.listdir(f"{path}/_archive") == [str(new_id)]
+        assert os.path.isfile(
+            f"{path}/_archive/{new_id}/cell_prefix=01/part.parquet"
+        )
+        assert [s["id"] for s in store_snapshots(path)] == (log or []) + [2]

@@ -2,7 +2,7 @@
 
 Checks (per query):
 - filters pushed to the parquet scan (PushedFilters non-empty)
-- partition pruning on the docs store (cell_prefix partition filters)
+- partition pruning on the typed store (cell_prefix partition filters)
 - broadcast joins where a small side exists (no SortMergeJoin surprises)
 - shuffle (Exchange) counts — the engine's core claim is ONE shuffle per
   aggregation, none before the kernel
@@ -36,7 +36,7 @@ def plan_of(df, execute: bool = True) -> str:
 def audit():
     import __spark_entry__ as E
     from oshdb_spark.model.history import SNAPSHOT_TS, docs_from_events
-    from oshdb_spark.plans.layout import read_docs_store, write_docs_store
+    from oshdb_spark.plans.layout import read_typed_store, write_typed_store
     from oshdb_spark.session import build_session
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
@@ -113,15 +113,15 @@ def audit():
         forbids={"sort-merge join": r"SortMergeJoin"},
     )
 
-    # 4. docs store partition pruning
+    # 4. typed store partition pruning
     import tempfile
 
     tmp = tempfile.mkdtemp(prefix="audit_store")
     docs = docs_from_events(spark.read.parquet(f"{sf_dir}/events.parquet"))
-    write_docs_store(docs, f"{tmp}/store", prefix_len=2)
-    pruned = read_docs_store(spark, f"{tmp}/store", bbox=(0.0, 0.0, 40.0, 40.0))
+    write_typed_store(docs, f"{tmp}/store", prefix_len=2)
+    pruned = read_typed_store(spark, f"{tmp}/store", bbox=(0.0, 0.0, 40.0, 40.0))
     check(
-        "docs store bbox read", pruned,
+        "typed store bbox read", pruned,
         wants={"partition filters on cell_prefix": r"PartitionFilters: \[[^\]]*cell_prefix"},
     )
 
@@ -1886,7 +1886,7 @@ def audit():
     )
     if not n_poly < n_bbox:
         failures.append("polygon cover not smaller than bbox cover")
-    pdf2 = read_docs_store(spark, tmp + "/store", bbox=(-60, -60, 60, 60), polygon=[poly[0]])
+    pdf2 = read_typed_store(spark, tmp + "/store", bbox=(-60, -60, 60, 60), polygon=[poly[0]])
     p = plan_of(pdf2)
     if "PartitionFilters" not in p or "cell_prefix" not in p:
         failures.append("polygon store read: PartitionFilters missing")

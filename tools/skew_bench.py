@@ -1,4 +1,4 @@
-"""Skew demonstration: hot-tile docs store write with vs without salting.
+"""Skew demonstration: hot-tile typed store write with vs without salting.
 
 90% of docs land in one dense tile (synth hot_fraction=0.9 — the urban
 hot-cell case the north rule mandates explicit handling for). Without
@@ -35,13 +35,13 @@ def main():
     from pyspark.sql import functions as F
 
     from oshdb_spark.model.synth import synth_docs_sql
-    from oshdb_spark.plans.layout import salt_plan, with_cell_token, with_salt
+    from oshdb_spark.plans.layout import _typed_tokenized, salt_plan, with_salt
     from oshdb_spark.session import build_session
 
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 300_000
     spark = build_session("skew-bench")
     docs = synth_docs_sql(spark, n_docs, versions_per_doc=4, hot_fraction=0.9)
-    toked = with_cell_token(docs, prefix_len=2)
+    toked = _typed_tokenized(docs, prefix_len=2)
     toked.write.mode("overwrite").parquet(
         os.path.join(tempfile.mkdtemp(prefix="skewsrc"), "toked.parquet")
     )  # warm codegen/workers

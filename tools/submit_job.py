@@ -7,8 +7,8 @@ Launch (what a cluster deployment runs; north-rule launch contract):
         --py-files dist/oshdb_spark.zip \
         tools/submit_job.py /root/testdata/sf0.001 /tmp/oshdb_out
 
-The job: events → docs → checkpointed docs store (Hilbert-prefix
-partitioned, salted) → snapshot spatial join → aggregate, with each stage
+The job: events → docs → checkpointed typed store (Hilbert-prefix
+partitioned, salted, decoded once) → snapshot spatial join → aggregate, with each stage
 resumable via the Pipeline checkpoint manifests.
 """
 
@@ -28,7 +28,7 @@ def main(sf_dir: str, out_base: str) -> None:
     from oshdb_spark.kernels.snapshot import snapshots
     from oshdb_spark.model.history import SNAPSHOT_TS, docs_from_events
     from oshdb_spark.plans.checkpoint import Pipeline
-    from oshdb_spark.plans.layout import write_docs_store
+    from oshdb_spark.plans.layout import write_typed_store
 
     p = Pipeline(spark, out_base, "flagship")
 
@@ -39,14 +39,14 @@ def main(sf_dir: str, out_base: str) -> None:
 
     store = p.stage(
         "store",
-        lambda path: write_docs_store(docs, path, prefix_len=2),
+        lambda path: write_typed_store(docs, path, prefix_len=2),
         inputs=["docs"],
         external=True,
     )
 
     def build_snap():
         return snapshots(
-            store.select("doc_id", "spans"),
+            store,
             SNAPSHOT_TS,
             bbox=(-90.0, 0.0, 90.0, 85.0),
             filter_spec=[("tag_eq", "event_type", "click")],
