@@ -16,11 +16,18 @@ Terminal reducers mirror MapReducer.java:1097-1370 (count/sum/average/
 weightedAverage/uniq/countUniq/estimatedQuantile). Aggregation mirrors
 MapAggregator.java:848-988 (group-by computed key, zerofill).
 
-Physical strategy: when the query is restricted to nodes and needs no
-polygon clipping, the plan compiles to the pure-Catalyst node fast path
-(kernels.snapshot.node_snapshots_sql — whole-stage codegen end-to-end, the
-100 TB scale path); otherwise to the vectorized pandas kernels. Both paths
-share filter pushdown through kernels.filters.
+Physical strategy: the rows compile when the terminal reducer runs, and
+the reducer decides. A nodes-only snapshot view with no polygon and no
+python filter whose geometry nobody reads — ``.without_geometry()``, or a
+reducer that reads no row column (``View.count``, or ``Aggregator.count``
+over the plain timestamp key) — compiles to the narrow Catalyst as-of
+route (kernels.snapshot.node_snapshots_sql): one JVM stage into the
+aggregate, no Python worker, no window, no join. Every other view runs the
+vectorized pandas kernels. Both read the one routing site
+(kernels.snapshot.prepared_docs), so filter pushdown is shared. The
+zerofill key frames are JVM-local (session.local_frame), and ``count``
+zerofills by a union into its own aggregate, so a count's only exchange
+is the aggregate's shuffle.
 """
 
 from __future__ import annotations
@@ -32,6 +39,7 @@ from pyspark.sql import functions as F
 
 from ..kernels import contribution as contrib_mod
 from ..kernels import snapshot as snap_mod
+from ..session import local_frame
 
 
 @dataclass(frozen=True)
@@ -145,18 +153,30 @@ class View:
                 return True
         return False
 
-    def dataframe(self) -> DataFrame:
-        """Compile to the rows DataFrame (snapshots / contributions)."""
+    def _node_route(self, geometry_read: bool) -> bool:
+        """The narrow Catalyst node route serves a nodes-only snapshot
+        view with no polygon and no python filter whose geometry nobody
+        reads: ``.without_geometry()``, or a reducer that reads no row
+        column (``count``)."""
+        s = self._s
+        return (
+            s.view == "snapshot"
+            and self._nodes_only()
+            and s.polygon is None
+            and not any(f[0] == "py" for f in s.filter_spec)
+            and not (s.with_geometry and geometry_read)
+        )
+
+    def _rows(self, geometry_read: bool = True) -> DataFrame:
         s = self._s
         if s.view == "snapshot":
             if not s.timestamps:
                 raise ValueError("snapshot view requires .timestamps([...])")
-            if self._nodes_only() and s.polygon is None and not s.with_geometry:
-                df = snap_mod.node_snapshots_sql(
+            if self._node_route(geometry_read):
+                return snap_mod.node_snapshots_sql(
                     s.docs, list(s.timestamps), bbox=s.bbox,
                     filter_spec=list(s.filter_spec) or None,
                 )
-                return df
             return snap_mod.snapshots(
                 s.docs, list(s.timestamps), bbox=s.bbox, polygon=s.polygon,
                 filter_spec=list(s.filter_spec) or None,
@@ -170,6 +190,10 @@ class View:
             area_decider=s.area_decider,
             with_geometry=s.with_geometry,
         )
+
+    def dataframe(self) -> DataFrame:
+        """Compile to the rows DataFrame (snapshots / contributions)."""
+        return self._rows()
 
     def stream(self):
         """Lazy row cursor (MapReducer.stream, :1422-1431) — Spark's
@@ -189,38 +213,44 @@ class View:
         the zerofill key set, MapReducer.java:1858-1866).
 
         `indexer` (MapReducer.java:836-844): a custom timestamp column
-        expression evaluated per row, floored to the grid the same way."""
+        expression evaluated per row, floored to the grid the same way.
+
+        The rows compile when the reducer runs: a plain snapshot ``count``
+        reads no row column, so it may take the geometry-free node route."""
         s = self._s
-        df = self.dataframe()
-        spark = df.sparkSession
-        ts_col = (
-            F.col("ts") if indexer is None
-            else (F.expr(indexer) if isinstance(indexer, str) else indexer)
-        )
+        keys = list(s.timestamps)
         if s.view == "snapshot" and indexer is None:
-            keyed = df.withColumn("_key_ts", ts_col)
-            keys = list(s.timestamps)
+            def key(df):
+                return df.withColumn("_key_ts", F.col("ts"))
         else:
+            ts_col = (
+                F.col("ts") if indexer is None
+                else (F.expr(indexer) if isinstance(indexer, str) else indexer)
+            )
             grid = "array(" + ",".join(str(t) for t in s.timestamps) + ")"
-            keyed = df.withColumn("_ix_ts", ts_col).withColumn(
-                "_key_ts",
-                F.expr(f"array_max(filter({grid}, g -> g <= _ix_ts))"),
-            ).filter(F.col("_key_ts").isNotNull()).drop("_ix_ts")
-            keys = list(s.timestamps)
+
+            def key(df):
+                return df.withColumn("_ix_ts", ts_col).withColumn(
+                    "_key_ts",
+                    F.expr(f"array_max(filter({grid}, g -> g <= _ix_ts))"),
+                ).filter(F.col("_key_ts").isNotNull()).drop("_ix_ts")
+
             if s.view != "snapshot":
                 keys = keys[:-1]  # drop last (zerofill key set)
         zf = ()
         if zerofill:
-            zf = (spark.createDataFrame([(int(t),) for t in keys], "_key_ts long"),)
-        return Aggregator(keyed, ("_key_ts",), zf, out_names=("ts",))
+            zf = (local_frame(
+                s.docs.sparkSession, [(int(t),) for t in keys], "_key_ts long"
+            ),)
+        return Aggregator(
+            self, (key,), ("_key_ts",), zf, ("ts",),
+            reads_rows=not (s.view == "snapshot" and indexer is None),
+        )
 
     def aggregate_by(self, name: str, col: Column | str, zerofill_values=None) -> "Aggregator":
-        df = self.dataframe().withColumn(f"_key_{name}", F.expr(col) if isinstance(col, str) else col)
-        zf = ()
-        if zerofill_values is not None:
-            spark = df.sparkSession
-            zf = (spark.createDataFrame([(v,) for v in zerofill_values], f"_key_{name} string"),)
-        return Aggregator(df, (f"_key_{name}",), zf, out_names=(name,))
+        return Aggregator(self, (), (), (), ()).aggregate_by(
+            name, col, zerofill_values
+        )
 
     def group_by_entity(self, fn, schema) -> DataFrame:
         """groupByEntity (MapReducer.java:707-721): feed ALL view rows of
@@ -232,52 +262,97 @@ class View:
 
     # -- terminal reducers on the un-aggregated view ------------------------
     def count(self) -> int:
-        return self.dataframe().count()
+        return self._rows(geometry_read=False).count()
 
 
 class Aggregator:
-    """Grouped reducers with zerofill (MapAggregator.java:848-988)."""
+    """Grouped reducers with zerofill (MapAggregator.java:848-988).
 
-    def __init__(self, df: DataFrame, keys: tuple, zerofill: tuple, out_names: tuple):
-        self.df = df
+    Holds the view and one key function per grouping key; the keyed rows
+    compile when a reducer runs, so a reducer that reads no row column
+    (``count``) over keys that read none either (the plain timestamp
+    key) compiles the view geometry-free."""
+
+    def __init__(self, view: View, keyers: tuple, keys: tuple,
+                 zerofill: tuple, out_names: tuple, reads_rows: bool = True):
+        self.view = view
+        self.keyers = keyers
         self.keys = keys
         self.zerofill = zerofill
         self.out_names = out_names
+        self.reads_rows = reads_rows
+
+    @property
+    def df(self) -> DataFrame:
+        """The keyed rows, geometry included."""
+        return self._keyed(True)
+
+    def _keyed(self, geometry_read: bool) -> DataFrame:
+        df = self.view._rows(geometry_read)
+        for key in self.keyers:
+            df = key(df)
+        return df
 
     def aggregate_by(self, name: str, col: Column | str, zerofill_values=None) -> "Aggregator":
         """Chained combined-index aggregation (OSHDBCombinedIndex analog:
         native multi-column groupBy; zerofill becomes the cross product)."""
-        df = self.df.withColumn(
-            f"_key_{name}", F.expr(col) if isinstance(col, str) else col
-        )
+        c = F.expr(col) if isinstance(col, str) else col
+
+        def key(df):
+            return df.withColumn(f"_key_{name}", c)
+
         zf = self.zerofill
         if zerofill_values is not None:
-            spark = df.sparkSession
-            zf = zf + (spark.createDataFrame([(v,) for v in zerofill_values], f"_key_{name} string"),)
-        return Aggregator(df, self.keys + (f"_key_{name}",), zf, self.out_names + (name,))
+            zf = zf + (local_frame(
+                self.view._s.docs.sparkSession,
+                [(v,) for v in zerofill_values], f"_key_{name} string",
+            ),)
+        return Aggregator(
+            self.view, self.keyers + (key,), self.keys + (f"_key_{name}",),
+            zf, self.out_names + (name,),
+        )
+
+    def _key_frame(self) -> DataFrame | None:
+        """Every zerofill key combination (the cross product of the key
+        frames); None unless every key has a zerofill frame."""
+        if not self.zerofill or len(self.zerofill) != len(self.keys):
+            return None
+        frame = self.zerofill[0]
+        for f in self.zerofill[1:]:
+            frame = frame.crossJoin(f)
+        return frame
+
+    def _renamed(self, out: DataFrame) -> DataFrame:
+        return out.withColumnsRenamed(dict(zip(self.keys, self.out_names)))
 
     def _finish(self, agg: DataFrame, fill) -> DataFrame:
         out = agg
-        if self.zerofill:
-            frame = self.zerofill[0]
-            for f in self.zerofill[1:]:
-                frame = frame.crossJoin(f)
-            if len(self.zerofill) == len(self.keys):
-                val_cols = [c for c in agg.columns if c not in self.keys]
-                # broadcast the AGGREGATED side (small: one row per key) —
-                # the outer side of a left join cannot be broadcast, so
-                # hinting the frame would silently fall back to a
-                # sort-merge join (caught by tools/explain_audit.py)
-                out = frame.join(F.broadcast(agg), list(self.keys), "left")
-                for c in val_cols:
-                    out = out.withColumn(c, F.coalesce(F.col(c), F.lit(fill)))
-        for k, n in zip(self.keys, self.out_names):
-            out = out.withColumnRenamed(k, n)
-        return out
+        frame = self._key_frame()
+        if frame is not None:
+            val_cols = [c for c in agg.columns if c not in self.keys]
+            # broadcast the AGGREGATED side (small: one row per key) —
+            # the outer side of a left join cannot be broadcast, so
+            # hinting the frame would silently fall back to a
+            # sort-merge join (caught by tools/explain_audit.py)
+            out = frame.join(F.broadcast(agg), list(self.keys), "left")
+            for c in val_cols:
+                out = out.withColumn(c, F.coalesce(F.col(c), F.lit(fill)))
+        return self._renamed(out)
 
     def count(self, alias: str = "cnt") -> DataFrame:
-        return self._finish(
-            self.df.groupBy(*self.keys).agg(F.count(F.lit(1)).alias(alias)), 0
+        """Rows per key. Zerofill is a union, not a join: the key frame's
+        rows count 0 in the same aggregate, so the aggregate's shuffle is
+        the plan's only exchange (no broadcast job after it)."""
+        rows = self._keyed(self.reads_rows).select(
+            *self.keys, F.lit(1).alias(alias)
+        )
+        frame = self._key_frame()
+        if frame is not None:
+            rows = rows.unionByName(
+                frame.select(*self.keys, F.lit(0).alias(alias))
+            )
+        return self._renamed(
+            rows.groupBy(*self.keys).agg(F.sum(alias).alias(alias))
         )
 
     def sum(self, col, alias: str = "sum") -> DataFrame:

@@ -24,6 +24,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from . import geodesy
 from .clip import clip_polygon_to_polygon
 
@@ -82,7 +83,8 @@ def areal_interpolate(
     overlap no source zone are absent from the output (no evidence —
     GeoAlign's baseline does the same)."""
     spark = src_agg.sparkSession
-    w = spark.createDataFrame(
+    w = local_frame(
+        spark,
         interpolation_weights(src_regions, dst_regions),
         "src string, dst string, w double",
     )

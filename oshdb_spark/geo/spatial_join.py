@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
 from . import cells
 from .clip import points_in_polygon
 from .geodesy import EARTH_RADIUS
@@ -617,8 +618,8 @@ def knn_batch(
 
     spark = df.sparkSession
     entries = [(t, qs) for t, qs in tok2q.items()]
-    map_df = spark.createDataFrame(
-        entries or [("", [])], "tok string, qids array<string>"
+    map_df = local_frame(
+        spark, entries or [("", [])], "tok string, qids array<string>"
     )
     cand = pts.join(
         F.broadcast(map_df), pts["_tok"] == map_df["tok"], "inner"
@@ -634,7 +635,7 @@ def knn_batch(
             .select(cand.columns)
         )
     qdf = F.broadcast(
-        spark.createDataFrame(qmeta, "qid string, qlon double, qlat double")
+        local_frame(spark, qmeta, "qid string, qlon double, qlat double")
     )
     cand = cand.join(qdf, "qid")
     lon_deg = F.col(lon_col) * scale

@@ -30,6 +30,7 @@ from ..geo import cells
 from ..geo import geom as G
 from ..model import docs as docs_mod
 from ..model import schemas
+from ..session import local_frame
 from .aoi import AOI
 from .filters import compile_doc_prefilter, compile_python
 from .geometry_builder import (
@@ -151,12 +152,10 @@ def prepared_docs(
     if pre is not None:
         docs = docs.filter(pre)
     if aoi is not None and not aoi.is_world:
-        b = aoi.bbox
+        b = [int(x * _FP) for x in aoi.bbox]
         docs = docs.filter(
-            (F.col("bbox_min_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_max_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_min_lat") <= int(b[3] * _FP))
-            & (F.col("bbox_max_lat") >= int(b[1] * _FP))
+            f"bbox_min_lon <= {b[2]} and bbox_max_lon >= {b[0]}"
+            f" and bbox_min_lat <= {b[3]} and bbox_max_lat >= {b[1]}"
         )
     if not fast_arrays:
         return docs.select(*_BASE, "spans")
@@ -178,8 +177,7 @@ def encode_docs(docs: DataFrame) -> DataFrame:
       'way' all-node members / 'relation' node-and-way members / null);
     - the flat version arrays (_V_COLS) for every doc, the flat member
       tables (_W_COLS / _R_COLS) for docs of the matching ``flat_kind``;
-    - the sorted nested ``versions`` column (SQL path, vmatch, doc
-      pre-filter).
+    - the sorted nested ``versions`` column (vmatch, doc pre-filter).
 
     plans.layout.write_typed_store stores this projection; prepared_docs
     runs it in flight over raw and native input."""
@@ -437,8 +435,8 @@ def _flattened_docs(typed: DataFrame) -> DataFrame:
             "m.versions,"
             " v -> transform(coalesce(v.refs, array()), r -> r.ref)))))"
         ).alias("rmref"),
-        # the sorted nested versions ride along for the SQL path
-        # (versions_table) and the query-time vmatch/prefilter
+        # the sorted nested versions ride along for the query-time
+        # vmatch and doc pre-filter
         "versions",
     )
 
@@ -454,80 +452,67 @@ def _routed_docs(
     the filter's vmatch, and when()-gating of the flat arrays. Structural
     facts were frozen by the encoder as ``flat_kind``; query-dependent
     conditions (AOI bbox containment, python filters, decider mode)
-    compose on top here."""
+    compose on top here.
+
+    One ``selectExpr`` of SQL strings with the routing flags inlined
+    where they gate: the Spark driver makes one analysis pass and one
+    Py4J call, not one per column (the column-by-column build took
+    ~0.5 s of Spark-driver time per query)."""
     from .filters import _version_pred_sql
 
-    inside = None
+    # <=>: flat_kind is NULL for structurally-unroutable docs, and a
+    # plain = would propagate that NULL into the fast flag and silently
+    # null out the spans gate (dropping the doc from the general path)
+    fastn, fastw, fastr = (
+        f"flat_kind <=> '{k}'" for k in ("node", "way", "relation")
+    )
     if aoi is not None and not aoi.is_world:
         # way/relation fast paths handle only docs whose bbox is inside
         # the AOI bbox (no clip step); boundary-crossing docs keep the
         # general per-doc path
-        b = aoi.bbox
+        b = [int(x * _FP) for x in aoi.bbox]
         inside = (
-            (F.col("bbox_min_lon") >= int(b[0] * _FP))
-            & (F.col("bbox_max_lon") <= int(b[2] * _FP))
-            & (F.col("bbox_min_lat") >= int(b[1] * _FP))
-            & (F.col("bbox_max_lat") <= int(b[3] * _FP))
+            f" and bbox_min_lon >= {b[0]} and bbox_max_lon <= {b[2]}"
+            f" and bbox_min_lat >= {b[1]} and bbox_max_lat <= {b[3]}"
         )
-    # eqNullSafe: flat_kind is NULL for structurally-unroutable docs, and
-    # a plain == would propagate that NULL into _fast and silently null
-    # out the spans gate (dropping the doc from the general path)
-    fast_node = F.col("flat_kind").eqNullSafe("node")
-    fast_way = F.col("flat_kind").eqNullSafe("way")
-    if inside is not None:
-        fast_way = fast_way & inside
+        fastw += inside
+        fastr += inside
     if not fast_ways:
-        fast_way = F.lit(False)
-    fast_rel = F.lit(False)
-    if fast_rels:
-        fast_rel = F.col("flat_kind").eqNullSafe("relation")
-        if inside is not None:
-            fast_rel = fast_rel & inside
+        fastw = "false"
+    if not fast_rels:
+        fastr = "false"
     if any(s[0] == "py" for s in (filter_spec or [])):
-        fast_node = F.lit(False)
-        fast_way = F.lit(False)
-        fast_rel = F.lit(False)
-    may_demote = aoi is not None and aoi.polygon is not None
-    typed = (
-        docs.withColumn("_fastn", fast_node)
-        .withColumn("_fastw", fast_way)
-        .withColumn("_fastr", fast_rel)
-        .withColumn(
-            "_fast", F.col("_fastn") | F.col("_fastw") | F.col("_fastr")
-        )
-    )
+        fastn = fastw = fastr = "false"
+    fastn, fastw, fastr = (f"({x})" for x in (fastn, fastw, fastr))
+    fast = f"({fastn} or {fastw} or {fastr})"
     # fast-way/relation docs under a polygon AOI may demote to the
     # general path (kernel-side exact 3-state), so they keep their spans;
     # fast nodes never demote (their polygon test is exact in the
     # vectorized path)
-    spans_keep = (~F.col("_fastn")) if may_demote else (~F.col("_fast"))
+    may_demote = aoi is not None and aoi.polygon is not None
+    spans_keep = f"not {fastn}" if may_demote else f"not {fast}"
     preds = [
         p for s in (filter_spec or []) for p in [_version_pred_sql(s)] if p
     ]
-    match_expr = None
+    vmatch = "cast(null as array<boolean>)"
     if preds:
         conj = " and ".join(f"({p})" for p in preds)
-        match_expr = f"transform(versions, v -> coalesce({conj}, false))"
-    out_cols = [
+        vmatch = (
+            f"case when {fast} then"
+            f" transform(versions, v -> coalesce({conj}, false)) end"
+        )
+    cols = [
         *_BASE,
-        F.when(spans_keep, F.col("spans")).alias("spans"),
-        F.when(F.col("_fastn"), F.lit("node"))
-        .when(F.col("_fastw"), F.lit("way"))
-        .when(F.col("_fastr"), F.lit("relation"))
-        .alias("fast_kind"),
-        *[F.when(F.col("_fast"), F.col(c)).alias(c) for c in _V_COLS],
-        (
-            F.when(F.col("_fast"), F.expr(match_expr))
-            if match_expr
-            else F.lit(None).cast("array<boolean>")
-        ).alias("vmatch"),
-        *[F.when(F.col("_fastw"), F.col(c)).alias(c) for c in _W_COLS],
+        f"case when {spans_keep} then spans end as spans",
+        f"case when {fastn} then 'node' when {fastw} then 'way'"
+        f" when {fastr} then 'relation' end as fast_kind",
+        *[f"case when {fast} then {c} end as {c}" for c in _V_COLS],
+        f"{vmatch} as vmatch",
+        *[f"case when {fastw} then {c} end as {c}" for c in _W_COLS],
     ]
     if fast_rels:
-        out_cols += [
-            F.when(F.col("_fastr"), F.col(c)).alias(c) for c in _R_COLS
-        ]
-    return typed.select(*out_cols)
+        cols += [f"case when {fastr} then {c} end as {c}" for c in _R_COLS]
+    return docs.selectExpr(*cols)
 
 
 def _doc_structs(row, token=None):
@@ -1323,47 +1308,57 @@ def _emit_doc_snapshots(row, requested, aoi, flt, decider, with_geometry, out,
 
 
 # ---------------------------------------------------------------------------
-# node-only pure-SQL fast path (zero Python; the 100 TB scale path when no
-# member recursion is involved)
+# node-only pure-Catalyst route (zero Python; geometry-free node views)
 # ---------------------------------------------------------------------------
 
 def node_snapshots_sql(
     docs: DataFrame, timestamps: list[int], bbox=None, filter_spec=None
 ) -> DataFrame:
-    """Snapshot view restricted to node docs, expressed entirely in
-    Catalyst: validity windows via lead() + broadcast range join against
-    the timestamp list. Same output columns as `snapshots` minus WKB (lon/
-    lat columns instead). Whole-stage-codegen end to end."""
-    spark = docs.sparkSession
-    versions = docs_mod.versions_table(docs).filter(F.col("entity_type") == "node")
-    pre = None
-    if filter_spec:
-        from .filters import _version_pred_sql
+    """Snapshot view of member-less node docs as one narrow Catalyst
+    as-of over the routing site (``prepared_docs``, ``fast_kind =
+    'node'``) — the JVM twin of ``_nodes_snapshot_vec`` without geometry.
 
-        for s in filter_spec:
-            if s[0] == "type_in" and "node" not in s[1]:
-                return spark.createDataFrame([], versions.schema)
-            p = _version_pred_sql(s)
-            if p:
-                pre = p if pre is None else f"({pre}) and ({p})"
-    if pre:
-        versions = versions.filter(F.expr(pre.replace("v.tags", "tags")))
-    ts_df = F.broadcast(
-        spark.createDataFrame([(int(t),) for t in timestamps], "ts long")
-    )
-    snap = versions.join(
-        ts_df,
-        (F.col("valid_from") <= F.col("ts"))
-        & (F.col("valid_to").isNull() | (F.col("ts") < F.col("valid_to"))),
-    ).filter(F.col("visible"))
+    Per requested ``t`` the as-of version index is ``size(filter(vts,
+    x -> x <= t)) - 1`` (the encoder sorts ``vts`` by (ts, version), so
+    this is the kernel's searchsorted); the index is kept when it is
+    ≥ 0, the version is visible, matches the filter (``vmatch``; the
+    ``id_in``/``type_in`` parts ran as the doc pre-filter) and its point
+    lies inside the bbox (inclusive, as ``_points_in_aoi``); then one
+    explode. No window, no join, no shuffle: the plan is a single narrow
+    stage up to whatever aggregate reads it.
+
+    Columns: ts, entity_type, id, version, changeset, uid, tags, lon, lat
+    (fixed-point), doc_id. ``tags`` is parsed from ``vtags`` with
+    from_json, so Catalyst prunes the parse when nothing reads it.
+    Python (``py``) filters need the kernel (``snapshots``)."""
+    if any(s[0] == "py" for s in filter_spec or []):
+        raise ValueError("python filters need the kernel path (snapshots)")
+    typed = prepared_docs(docs, filter_spec, AOI(bbox=bbox), fast_arrays=True)
+    grid = ", ".join(f"{int(t)}L" for t in sorted(timestamps))
+    keep = "s.i >= 0 and vvisible[s.i] and coalesce(vmatch[s.i], true)"
     if bbox is not None:
-        snap = snap.filter(
-            (F.col("lon") >= int(bbox[0] * _FP))
-            & (F.col("lon") <= int(bbox[2] * _FP))
-            & (F.col("lat") >= int(bbox[1] * _FP))
-            & (F.col("lat") <= int(bbox[3] * _FP))
+        w, so, e, n = (f"{float(x)!r}D" for x in bbox)
+        keep += (
+            f" and vlon[s.i] * 1e-7 between {w} and {e}"
+            f" and vlat[s.i] * 1e-7 between {so} and {n}"
         )
-    return snap.select(
-        "ts", "entity_type", "id", "version", "changeset", "uid", "tags",
-        "lon", "lat", "doc_id",
+    asof = (
+        f"filter(transform(cast(array({grid}) as array<bigint>),"
+        " t -> named_struct('ts', t,"
+        " 'i', size(filter(vts, x -> x <= t)) - 1)),"
+        f" s -> {keep})"
     )
+    # selectExpr: one analysis pass and one Py4J call per step
+    out = typed.where("fast_kind = 'node'").selectExpr(
+        "id", "doc_id", *_V_COLS, f"explode({asof}) as _s"
+    ).selectExpr(
+        "_s.ts as ts", "'node' as entity_type", "id",
+        "vversion[_s.i] as version", "vchangeset[_s.i] as changeset",
+        "vuid[_s.i] as uid",
+        "from_json(vtags[_s.i], 'map<string,string>') as tags",
+        "vlon[_s.i] as lon", "vlat[_s.i] as lat", "doc_id",
+    )
+    types = _allowed_types(filter_spec)
+    if not timestamps or (types is not None and "node" not in types):
+        return local_frame(docs.sparkSession, [], out.schema)
+    return out

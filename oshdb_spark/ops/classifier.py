@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _features(
     df: DataFrame,
@@ -70,8 +72,8 @@ def _scores(
     a literal map lookup — n_buckets entries, codegen, no join."""
     spark = feats.sparkSession
     wdf = F.broadcast(
-        spark.createDataFrame(
-            [(i, float(w)) for i, w in enumerate(weights)], "b int, w double"
+        local_frame(
+            spark, [(i, float(w)) for i, w in enumerate(weights)], "b int, w double"
         )
     )
     z = feats.join(wdf, "b").groupBy(id_col).agg(

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def _canon(e: DataFrame) -> DataFrame:
     """(big, small) canonical directed edges, self-loops dropped."""
@@ -244,8 +246,8 @@ def sssp(
         .localCheckpoint()
     )
     spark = edges.sparkSession
-    best = spark.createDataFrame(
-        [(int(s), 0) for s in sorted(set(sources))], "node long, dist long"
+    best = local_frame(
+        spark, [(int(s), 0) for s in sorted(set(sources))], "node long, dist long"
     )
     frontier = best
     for _ in range(n_iter):

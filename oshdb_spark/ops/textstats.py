@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # tiny marker lists per language — deterministic voting, shared with the
 # oracle SQL (keep in sync with __spark_entry__)
 LANG_MARKERS = {
@@ -188,9 +190,7 @@ def chunk_plan(
     for pid in sorted(totals):
         offsets.append((pid, acc))
         acc += int(totals[pid] or 0)
-    off_df = df.sparkSession.createDataFrame(
-        offsets, schema="_off_pid int, _off long"
-    )
+    off_df = local_frame(df.sparkSession, offsets, "_off_pid int, _off long")
     local = local.join(
         F.broadcast(off_df), local["_pid"] == off_df["_off_pid"], "left"
     ).drop("_off_pid")

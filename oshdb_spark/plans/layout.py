@@ -172,6 +172,27 @@ def _typed_tokenized(docs: DataFrame, prefix_len: int) -> DataFrame:
     )
 
 
+_STORE_SCHEMA: T.StructType | None = None
+
+
+def store_schema(spark: SparkSession) -> T.StructType:
+    """The typed store's read schema: the write projection
+    (``_typed_tokenized``, then the write tail's ``cell_salt``) with
+    ``cell_prefix`` a string. Reading with it skips parquet's
+    footer-reading schema-inference job, and partition discovery no
+    longer types all-digit prefixes as ints ('01' → 1, which the LIKE
+    '0%' prefix pruning then misses). Derived once per process by
+    analysing the projection over an empty input — no job, no file."""
+    global _STORE_SCHEMA
+    if _STORE_SCHEMA is None:
+        from ..model import schemas
+        from ..session import local_frame
+
+        empty = local_frame(spark, [], schemas.DOCS)
+        _STORE_SCHEMA = with_salt(_typed_tokenized(empty, 1), {}).schema
+    return _STORE_SCHEMA
+
+
 def write_typed_store(
     docs: DataFrame,
     path: str,
@@ -188,7 +209,7 @@ def write_typed_store(
     arrays (v*/m*/rm* — parquet+Arrow's best case), parsed unix
     timestamps, pre-sorted versions, the structural routing fact
     `flat_kind`, the raw spans (general-path fallback), and the sorted
-    nested `versions` column for the pure-SQL path. Deliberately NOT
+    nested `versions` column for the query-time tag match. Deliberately NOT
     stored: nested `members` — double-nested structs with maps defeat the
     parquet nested reader and the Arrow transfer (measured 40× slower
     than flat on member-heavy docs).
@@ -333,11 +354,8 @@ def compact_typed_store(
 
     tmp = tempfile.mkdtemp(prefix="typed_store_compact")
     try:
-        sub = spark.read.parquet(path).filter(
+        sub = read_typed_store(spark, path).filter(
             F.col("cell_prefix").isin(fat)
-        ).withColumn(
-            "cell_prefix",
-            F.lpad(F.col("cell_prefix").cast("string"), len(fat[0]), "0"),
         )
         # content is unchanged, and so are the manifest counts
         _write_cells(sub, f"{tmp}/packed", target_rows)
@@ -417,18 +435,10 @@ def update_typed_store(
     import tempfile
 
     spark = docs_changed.sparkSession
-    # enforce same-schema store before merging into it
-    read_typed_store(spark, path).schema
-
+    # refuses a store of another schema version before merging into it
+    store = read_typed_store(spark, path)
     new_toked = _typed_tokenized(docs_changed, prefix_len)
     ids = new_toked.select("doc_id").distinct()
-    # partition-dir type inference reads all-digit prefixes back as ints
-    # (dropping leading zeros); restore the fixed-width token form so the
-    # rewrite regenerates identical partition directories
-    store = spark.read.parquet(path).withColumn(
-        "cell_prefix",
-        F.lpad(F.col("cell_prefix").cast("string"), prefix_len, "0"),
-    )
     new_prefixes = {
         r["cell_prefix"] for r in new_toked.select("cell_prefix").distinct().collect()
     }
@@ -454,7 +464,7 @@ def update_typed_store(
             f"{tmp}/merged"
         )
 
-        merged = spark.read.parquet(f"{tmp}/merged")
+        merged = spark.read.schema(old_keep.schema).parquet(f"{tmp}/merged")
         # snapshot isolation: archive the pre-merge bytes of every
         # partition the dynamic overwrite is about to delete, THEN swap
         plan, counts = _append_snapshot(
@@ -502,14 +512,19 @@ def read_typed_store(
             f"typed store at {path} has schema v{ver}, engine expects "
             f"v{STORE_SCHEMA_VERSION} — re-run write_typed_store"
         )
+    schema = store_schema(spark)
     snaps = store_snapshots(path)
     if version is not None and snaps and version != snaps[-1]["id"]:
         # time travel: stitch live partitions with later merges' archives
         # (each dir loses its partition column — restore it per prefix)
+        data = T.StructType(
+            [f for f in schema.fields if f.name != "cell_prefix"]
+        )
         parts = []
         for p, d in _version_partition_dirs(path, version):
             parts.append(
-                spark.read.parquet(d).withColumn("cell_prefix", F.lit(p))
+                spark.read.schema(data).parquet(d)
+                .withColumn("cell_prefix", F.lit(p))
             )
         if not parts:
             raise ValueError(f"snapshot {version} of {path} is empty")
@@ -517,7 +532,7 @@ def read_typed_store(
         for extra in parts[1:]:
             df = df.unionByName(extra)
     else:
-        df = spark.read.parquet(path)
+        df = spark.read.schema(schema).parquet(path)
     if bbox is None:
         return df
     df = _prefix_pruned(df, bbox, prefix_len, polygon)

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def build_session(
@@ -45,6 +45,30 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A small frame built on the Spark driver (key grids, lookup tables),
+    planned as a JVM ``LocalTableScan``. ``spark.createDataFrame(list)``
+    — and pandas input while Arrow is off, the default of a plain
+    session — plans as ``Scan ExistingRDD`` over a Python RDD, so every
+    collect of it runs Python-worker tasks (0.36 s vs 0.01 s for a 6-row
+    key frame on 4 cores). An Arrow table goes straight into a
+    ``LocalRelation`` whatever the session's Arrow setting. ``rows`` are
+    tuples in field order; ``schema`` is a StructType or a DDL string."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if not isinstance(schema, StructType):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 class QueryTimeout(Exception):

@@ -163,3 +163,39 @@ def test_registry_count_pinned():
     q, o = E.queries(), E.oracle_sql()
     assert len(q) == 201
     assert set(q) == set(o)
+
+
+def test_node_route_applies_id_and_python_filters(spark):
+    """The geometry-free node route (a plain timestamp count) and the
+    kernel count the same rows under `id_in` and python filters: `id_in`
+    runs as the route's doc pre-filter, and a python filter sends the
+    view to the kernel."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from oshdb_spark.api.timestamps import timestamp_list
+    from oshdb_spark.kernels.snapshot import node_snapshots_sql
+    from oshdb_spark.model import synth
+
+    ts = timestamp_list("2010-01-01", "2014-01-01", "P1Y")
+    docs = synth.synth_docs_sql(spark, 200, versions_per_doc=3)
+    base = OSHDB(docs).snapshot_view().timestamps(ts).osm_type("node")
+    for view, want in (
+        (base.osm_entity_filter(lambda v, et, i: i % 2 == 0), 100),
+        (base._with(filter_spec=base._s.filter_spec + (("id_in", [1, 2, 3]),)), 3),
+    ):
+        route = {r.ts: r.cnt for r in view.aggregate_by_timestamp().count().collect()}
+        free = {
+            r.ts: r.cnt for r in
+            view.without_geometry().aggregate_by_timestamp().count().collect()
+        }
+        kernel = {
+            r.ts: r.cnt for r in
+            view.dataframe().groupBy("ts").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        assert route == free == kernel == {t: want for t in ts}
+        assert view.count() == want * len(ts)
+    plan = base.aggregate_by_timestamp().count()._jdf.queryExecution()
+    assert "MapInPandas" not in plan.executedPlan().toString()
+    with pytest.raises(ValueError):
+        node_snapshots_sql(docs, ts, filter_spec=[("py", lambda v, et, i: True)])

@@ -114,6 +114,56 @@ def test_store_pruning_and_manifest(spark, tmp_path):
     assert 0 < n_pruned < n_all
 
 
+def test_level1_cover_keeps_every_child_partition(spark, tmp_path):
+    """A level-1 cover token ('0') must keep all of its level-2 child
+    partitions 00–03. Inferred as ints, the prefixes 01–03 read back as
+    1–3 and `cell_prefix LIKE '0%'` kept only 00; the store schema pins
+    cell_prefix to its string form. The read itself starts no job."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from oshdb_spark.geo import cells
+    from oshdb_spark.model import synth
+
+    fp = 10_000_000
+    docs = [
+        synth.make_doc("node", i + 1, [synth.make_version(
+            1, "2010-01-01T00:00:00Z", 1, lon=lon * fp, lat=lat * fp)])
+        for i, (lon, lat) in enumerate(
+            (lon, lat) for lon in range(-175, 176, 10)
+            for lat in range(-85, 86, 10)
+        )
+    ]
+    path = str(tmp_path / "store")
+    write_typed_store(synth.docs_df(spark, docs), path)
+    parts = {d.split("=", 1)[1] for d in os.listdir(path)
+             if d.startswith("cell_prefix=")}
+    assert {"00", "01", "02", "03"} <= parts
+
+    bbox = (-180.0, -90.0, -1.0, -1.0)
+    assert cells.cover_prefixes(
+        tuple(int(x * fp) for x in bbox), level=2, enlarge=True
+    ) == ["0"]
+    sc = spark.sparkContext
+    sc.setJobGroup("typed-store-read", "read_typed_store")
+    try:
+        pruned = read_typed_store(spark, path, bbox=bbox)
+        pruned.schema
+    finally:
+        sc.setJobGroup("", "")
+    assert sc.statusTracker().getJobIdsForGroup("typed-store-read") == []
+    b7 = tuple(int(x * fp) for x in bbox)
+    want = read_typed_store(spark, path).filter(
+        (F.col("bbox_min_lon") <= b7[2]) & (F.col("bbox_max_lon") >= b7[0])
+        & (F.col("bbox_min_lat") <= b7[3]) & (F.col("bbox_max_lat") >= b7[1])
+    )
+    assert sorted(r.doc_id for r in pruned.select("doc_id").collect()) == \
+        sorted(r.doc_id for r in want.select("doc_id").collect())
+    assert {r.cell_prefix for r in pruned.select("cell_prefix").collect()} \
+        == {"00", "01", "02", "03"}
+
+
 def test_node_sql_path_on_typed_store(spark, tmp_path):
     """The pure-Catalyst node path (versions_table) accepts the typed
     store directly — same counts as the raw docs path."""

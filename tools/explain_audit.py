@@ -65,22 +65,57 @@ def audit():
         report.extend(lines)
         return p
 
-    # 1. pure-Catalyst node snapshot path
+    def verdict(name, label, ok):
+        report.append(f"- {label}: {'OK' if ok else 'VIOLATED'}")
+        if not ok:
+            failures.append(f"{name}: {label}")
+
+    def engine_stretch(p):
+        """The formatted plan tree above the events → docs derivation:
+        model.history's doc-assembly ObjectHashAggregate and the windows
+        and shuffles below it are the synthetic workload's, not the
+        engine's."""
+        tree = p.split("== Executed ==")[0].split("\n(1)")[0]
+        return tree.split("ObjectHashAggregate")[0]
+
+    # 1. node snapshot count: the narrow Catalyst as-of route — one
+    # narrow stage into the aggregate, so the aggregate's shuffle is the
+    # only exchange and nothing below the partial aggregate shuffles
     df = E.q_snapshot_count(spark, sf_dir)
-    check(
+    p = check(
         "snapshot_sql (node fast path)", df,
-        wants={
-            "whole-stage codegen": r"codegen id|[*][(][0-9]",
-            "broadcast ts-grid join": r"Broadcast.*Join|BroadcastNestedLoopJoin",
-        },
+        wants={"whole-stage codegen": r"codegen id|[*][(][0-9]"},
         forbids={"sort-merge join": r"SortMergeJoin"},
     )
+    below = engine_stretch(p).rsplit("HashAggregate", 1)[-1]
+    verdict("snapshot_sql", "no Exchange below the aggregate",
+            "Exchange" not in below)
 
-    # 2. pandas snapshot kernel: ONE exchange (the final groupBy), none
-    # before the kernel
-    df = E.q_snapshot_bbox_tag(spark, sf_dir)
+    # 1b. geometry-free node counts never enter Python: the flagship, the
+    # node count and the bbox+tag count (geometry on, but the reducer
+    # reads no row column) plan no Python worker, no window and no
+    # Python-RDD frame (the zerofill keys are a LocalTableScan)
+    for qname, qdf in (
+        ("entry", E.entry(spark)),
+        ("snapshot_count", E.q_snapshot_count(spark, sf_dir)),
+        ("snapshot_bbox_tag", E.q_snapshot_bbox_tag(spark, sf_dir)),
+    ):
+        p = check(
+            f"{qname} (node count route)", qdf,
+            wants={"local key frame": r"LocalTableScan"},
+            forbids={
+                "python worker": r"MapInPandas|ArrowEvalPython|BatchEvalPython",
+                "Python-RDD frame": r"Scan ExistingRDD",
+            },
+        )
+        verdict(qname, "no Window in the engine's plan",
+                "Window" not in engine_stretch(p))
+
+    # 2. pandas snapshot kernel (a polygon AOI still takes it): ONE
+    # exchange (the final groupBy), none before the kernel
+    df = E.q_snapshot_polygon(spark, sf_dir)
     p = check(
-        "snapshot_kernel (bbox+tag)", df,
+        "snapshot_kernel (polygon)", df,
         wants={
             "arrow-batched kernel": r"MapInPandas|ArrowEvalPython",
             "partial aggregate before shuffle": r"HashAggregate",
